@@ -9,11 +9,10 @@ import java.nio.file.{Files, Paths}
   *    config-drift crashes;
   *  - per-query failures are RECORDED (errors map) and fail the run
   *    (nonzero exit), never silently timed as successes;
-  *  - the FULL metric JSON (metric/value/unit/queries/errors/sf/diag —
-  *    the same record as always) is written to bench_result.json AND to
-  *    a per-core-count bench_result_c<cpus>.json, so a lower-core
-  *    scaling run can no longer clobber the main run's per-query record
-  *    (VERDICT r13: the driver's c8 run destroyed its own c32 record);
+  *  - the FULL metric JSON (metric/value/unit/queries/errors/sf/diag)
+  *    is written to a per-core-count bench_result_c<cpus>.json, so a
+  *    lower-core scaling run cannot clobber another run's per-query
+  *    record;
   *  - stdout's FINAL line is a COMPACT (≤200 B) summary JSON. The full
   *    record had grown to ~30 KB on one line (227 timings + per-entry
   *    gc/steal diags) and the driver keeps only a 2 KB stdout tail, so
@@ -22,7 +21,7 @@ import java.nio.file.{Files, Paths}
   *    a declared measurement-bug fix (guide §1: the record must be
   *    readable to count): the timed loop, min-of-2 passes, noop sink
   *    and isolation are byte-identical, no entry removed or renamed,
-  *    and the full per-query record still exists — in the two files.
+  *    and the full per-query record still exists — in the record file.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -52,7 +51,7 @@ object Bench {
     // driver never sets it — the contract run times everything.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // Fail fast on unknown names: a typo would otherwise time an empty
-    // selection and overwrite bench_result.json with a 0-query "success".
+    // selection and write a 0-query "success" record.
     only.foreach { names =>
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty,
@@ -184,12 +183,11 @@ object Bench {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
       .flatMap(_.trim.toIntOption)
       .getOrElse(Runtime.getRuntime.availableProcessors)
-    Files.writeString(Paths.get("bench_result.json"), json)
     Files.writeString(Paths.get(s"bench_result_c$cpus.json"), json)
     spark.stop()
     // Final clean stdout line — the driver greps a bounded stdout TAIL
     // for it, so it must be SMALL (see the contract note above): total +
-    // counts here, every per-query number in the two record files.
+    // counts here, every per-query number in the record file.
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""n_ok":${timings.size - errors.size},"n_err":${errors.size},""" +
       s""""sf":${jstr(sfDir)},"cpus":$cpus,""" +

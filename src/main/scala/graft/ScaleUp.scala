@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * HONEST growth semantics — the sf1-equivalent the 10× gate runs on
   * (SURVEY §9).
   *
-  * Growth model (the same regimes the Profile probes use):
+  * Growth model:
   *  - every copy is a disjoint key universe: all primary/foreign keys
   *    offset by copy × (max(key)+1), so join structure replicates
   *    exactly (10 shards of sf0.1, the realistic "more customers, more
@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *    salt (digit tripled: copies stay ≥ 3 edits apart, so near-dup /
   *    fuzzy-match structure replicates ~linearly instead of exploding
   *    quadratically on clone pairs — a 10× clone corpus would measure a
-  *    duplication artifact, not scale). BM25's homogeneous-growth twin
-  *    (query-term postings ×10) is probed separately (Profile bm25);
+  *    duplication artifact, not scale). BM25's homogeneous-growth regime
+  *    (query-term postings ×10) is outside this model;
   *  - embeddings are cyclically shifted per copy (within-copy cosine
   *    structure preserved exactly, cross-copy decorrelated);
   *  - event timestamps are unchanged: more users, same per-user history.

@@ -58,15 +58,14 @@ object Sessions {
       // sees, so oracles are unaffected. (Tables.load also casts any NTZ
       // column defensively, for sessions built elsewhere.)
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // RocksDB state store (r11, VERDICT r10 #5): the default HDFS-
-      // backed provider keeps every stateful operator's state as an
-      // on-heap map and re-snapshots it wholesale per batch — at 100 TB
-      // state scale that's an OOM by design, and even at bench scale the
-      // per-batch full-map commit is measurable: the Profile `streams`
-      // split showed st_dedup (largest per-key state in the family) at
-      // 6.9-7.5 s wall with addBatch dominating; RocksDB's incremental
-      // commit cuts it to 2.3-3.0 s with every other st_* entry equal or
-      // better. State lives off-heap with changelog-style checkpoints —
+      // RocksDB state store: the default HDFS-backed provider keeps
+      // every stateful operator's state as an on-heap map and
+      // re-snapshots it wholesale per batch — at 100 TB state scale
+      // that's an OOM by design, and even at bench scale the per-batch
+      // full-map commit dominates the wall of the entry with the largest
+      // per-key state (st_dedup); RocksDB's incremental commit more than
+      // halves it and leaves no other st_* entry slower. State lives
+      // off-heap with changelog-style checkpoints —
       // the production provider for large state.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg: comma-separated query-name filter (dev iteration).
-    val selected: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    val selected: Map[String, SparkEntry.Q] =
       if (args.length > 2) {
         val keep = args(2).split(",").toSet
         SparkEntry.queries.filter { case (k, _) => keep(k) }

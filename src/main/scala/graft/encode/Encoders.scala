@@ -17,9 +17,7 @@ import graft.util.Cols._
   * the build is a global distinct and the apply is a giant broadcast.
   * Both encoders here are map-side, stateless functions of the row.
   */
-object Encoders {
-
-  type Q = (SparkSession, String) => DataFrame
+object Encoders extends graft.Registry {
 
   /** Hashing-trick (feature-hashing) encode of the event stream: each
     * row's categorical features map straight to column indices via

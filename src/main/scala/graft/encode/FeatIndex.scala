@@ -25,7 +25,7 @@ import graft.Tables
   * loaded from the text format, then applied as a broadcast literal map
   * lookup — a map-side-only encode, no shuffle, fully codegen.
   */
-object FeatIndex {
+object FeatIndex extends graft.Registry {
 
   /** Build a featindex dictionary from data: per field, slot `other`
     * first then observed values lexically ascending; global indices run
@@ -180,8 +180,6 @@ object FeatIndex {
       .load(path)
 
   // ---- declared queries --------------------------------------------
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Demo field set over testdata. */
   val Fields: Seq[String] = Seq("o_orderpriority", "o_orderstatus")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * expression instead of the reference's udf (RF/utils.scala:83-86), so
   * the whole scoring path stays in whole-stage codegen.
   */
-object Metrics {
+object Metrics extends graft.Registry {
 
   /** E3: positive-class probability from the ml `probability` vector. */
   def positiveProb(probabilityCol: Column): Column =
@@ -79,8 +79,6 @@ object Metrics {
         avg(col(labelCol).cast("double")).as("frac_pos"))
       .orderBy(col("bin"))
   }
-
-  type Q = (org.apache.spark.sql.SparkSession, String) => DataFrame
 
   /** e5_pr_curve: the threshold-sweep confusion table behind every PR /
     * ROC curve, as a DECLARED oracle-checked query — E2 gives one

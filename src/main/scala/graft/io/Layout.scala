@@ -31,9 +31,7 @@ import graft.Tables
   * SKIPPING: per-file min/max overlap counts under single-dim
   * predicates for a z-order vs a linear layout.
   */
-object Layout {
-
-  type Q = (SparkSession, String) => DataFrame
+object Layout extends graft.Registry {
 
   /** Spread the low 16 bits of `x` to even bit positions (Morton). */
   def spread16(x: Column): Column = {

@@ -18,9 +18,7 @@ import graft.llm.TextOps.hash48Sql
   * rows — so the oracle checks the whole path, not just that a write
   * didn't throw.
   */
-object Sinks {
-
-  type Q = (SparkSession, String) => DataFrame
+object Sinks extends graft.Registry {
 
   /** Per-query scratch dir — see [[graft.util.Scratch]] for the
     * process-isolation + cleanup contract. */

@@ -1,6 +1,6 @@
 package graft.llm
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -74,7 +74,13 @@ object AnnIndex {
     * integer sum is bit-exact on both engines (float→double widening is
     * exact, the double multiply+floor are identical IEEE ops, the sum
     * is exact integer arithmetic). */
-  def sig(spark: SparkSession, dir: String): String = {
+  def sig(spark: SparkSession, dir: String): String = sigAndFp(spark, dir)._1
+
+  /** [[sig]] together with the corpus fingerprint it was resolved from.
+    * The ensure* paths record exactly this fingerprint, never a re-read
+    * one: a corpus rewritten while an artifact trains must not bind its
+    * new fingerprint to the old corpus's sig. */
+  private def sigAndFp(spark: SparkSession, dir: String): (String, String) = {
     // ARTIFACT-BACKED memo (r14, VERDICT r13 #5 — replaces the r13
     // in-process TrieMap, which made serve entries after the first
     // cheaper inside one bench JVM than in a cold process): each
@@ -89,39 +95,45 @@ object AnnIndex {
     // regenerated corpus (new sizes/mtimes — the driver regenerates
     // testdata between rounds) misses and rescans.
     val fp = fsFingerprint(dir)
-    storedSig(fp).getOrElse {
+    val s = storedSig(fp).getOrElse {
       val r = Tables.load(spark, dir, "embeddings")
         .agg(count(lit(1)).as("n"), sum(col("vec_id")).as("sv"),
           sum(floor(col("embedding").getItem(0).cast("double") * 1000000)
             .cast("long")).as("ev")).head()
       s"${r.getLong(0)}_${r.getLong(1)}_${r.getLong(2)}"
     }
+    (s, fp)
   }
 
   /** Scan the store for a component dir whose `_FP` sidecar contains
     * this fingerprint; its `sig=` dir name is the memoized sig. A few
     * directory reads — never a data scan. */
-  private def storedSig(fp: String): Option[String] = {
+  private def storedSig(fp: String): Option[String] =
+    sigDirs().collectFirst {
+      case sd if storedFps(sd).contains(fp) =>
+        sd.getFileName.toString.stripPrefix("sig=")
+    }
+
+  /** Every `<kind>/<component>/sig=<s>` dir in the store. */
+  private def sigDirs(): List[Path] = {
+    def subdirs(p: Path): List[Path] = {
+      val st = Files.list(p)
+      try st.iterator().asScala.filter(Files.isDirectory(_)).toList
+      finally st.close()
+    }
     val b = Paths.get(base)
-    if (!Files.isDirectory(b)) return None
-    val kinds = Files.list(b)
-    try kinds.iterator().asScala.filter(Files.isDirectory(_)).flatMap { kind =>
-      val comps = Files.list(kind)
-      try comps.iterator().asScala.filter(Files.isDirectory(_)).flatMap { comp =>
-        val sigs = Files.list(comp)
-        try sigs.iterator().asScala.flatMap { sd =>
-          val n = sd.getFileName.toString
-          val fpFile = sd.resolve("_FP")
-          if (n.startsWith("sig=") && Files.exists(fpFile) &&
-              Files.readAllLines(fpFile).asScala.contains(fp))
-            Some(n.stripPrefix("sig="))
-          else None
-        }.toList
-        finally sigs.close()
-      }.toList
-      finally comps.close()
-    }.toList.headOption
-    finally kinds.close()
+    if (!Files.isDirectory(b)) Nil
+    else for {
+      kind <- subdirs(b); comp <- subdirs(kind); sd <- subdirs(comp)
+      if sd.getFileName.toString.startsWith("sig=")
+    } yield sd
+  }
+
+  /** The fingerprints recorded in a sig dir's `_FP` sidecar. */
+  private[llm] def storedFps(sd: Path): Seq[String] = {
+    val fpFile = sd.resolve("_FP")
+    if (Files.exists(fpFile)) Files.readAllLines(fpFile).asScala.toSeq
+    else Nil
   }
 
   /** Record the corpus fingerprint into every existing `sig=<s>`
@@ -130,35 +142,17 @@ object AnnIndex {
     * complete tier. Multiple fingerprints per sidecar are fine — a
     * corpus rewritten byte-identically (same sig, new mtimes) appends
     * a second line mapping to the same sig. */
-  private def recordFp(s: String, dir: String): Unit = {
-    val fp = fsFingerprint(dir)
-    val b = Paths.get(base)
-    if (!Files.isDirectory(b)) return
-    val kinds = Files.list(b)
-    try kinds.iterator().asScala.filter(Files.isDirectory(_)).foreach { kind =>
-      val comps = Files.list(kind)
-      try comps.iterator().asScala.filter(Files.isDirectory(_)).foreach { comp =>
-        val sd = comp.resolve(s"sig=$s")
-        if (ready(sd.toString)) {
-          val fpFile = sd.resolve("_FP")
-          val known = if (Files.exists(fpFile))
-            Files.readAllLines(fpFile).asScala.toSet else Set.empty[String]
-          if (!known.contains(fp))
-            Files.writeString(fpFile, fp + "\n",
-              java.nio.file.StandardOpenOption.CREATE,
-              java.nio.file.StandardOpenOption.APPEND)
-        }
-      }
-      finally comps.close()
-    }
-    finally kinds.close()
-  }
+  private def recordFp(s: String, fp: String): Unit =
+    sigDirs().filter(sd => sd.getFileName.toString == s"sig=$s" &&
+        ready(sd.toString) && !storedFps(sd).contains(fp))
+      .foreach(sd => Files.writeString(sd.resolve("_FP"), fp + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND))
 
   /** One line of filesystem metadata identifying the corpus: the dir
     * path (so two corpora with coincidentally identical listings can
     * never share a sidecar line) plus every data file's
     * (name, size, mtime). */
-  private def fsFingerprint(dir: String): String =
+  private[llm] def fsFingerprint(dir: String): String =
     s"${Paths.get(dir).toAbsolutePath.normalize}::${fsListing(dir)}"
 
   private def fsListing(dir: String): String = {
@@ -388,7 +382,7 @@ object AnnIndex {
     * (books, codes) parquet paths for callers that want the artifact
     * TABLES rather than driver arrays (the incremental-encode op). */
   def ensurePqPaths(spark: SparkSession, dir: String): (String, String) = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigAndFp(spark, dir)
     val bp = componentPath("pq", "books", s)
     val cp = componentPath("pq", "codes", s)
     if (!ready(bp) || !ready(cp)) {
@@ -397,7 +391,7 @@ object AnnIndex {
       writeAtomic(booksDf(spark, books), bp)
       writeAtomic(codes.coalesce(8), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     (bp, cp)
   }
 
@@ -409,7 +403,7 @@ object AnnIndex {
 
   /** Ensure the IVF artifact exists; returns the (cents, codes) paths. */
   def ensureIvfPaths(spark: SparkSession, dir: String): (String, String) = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigAndFp(spark, dir)
     val kp = componentPath("ivf", "cents", s)
     val cp = componentPath("ivf", "codes", s)
     if (!ready(kp) || !ready(cp)) {
@@ -418,7 +412,7 @@ object AnnIndex {
       writeAtomic(centsDf(spark, model), kp)
       writeAtomic(codes.coalesce(8), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     (kp, cp)
   }
 
@@ -430,7 +424,7 @@ object AnnIndex {
 
   def ensureIvfPq(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigAndFp(spark, dir)
     val kp = componentPath("ivfpq", "cents", s)
     val bp = componentPath("ivfpq", "books", s)
     val cp = componentPath("ivfpq", "codes", s)
@@ -441,7 +435,7 @@ object AnnIndex {
       writeAtomic(booksDf(spark, books), bp)
       writeAtomic(codes.coalesce(8), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     (loadCents(spark, kp), loadBooks(spark, bp), spark.read.parquet(cp))
   }
 
@@ -471,7 +465,7 @@ object AnnIndex {
     * internals), so the cents parquet is the complete replayable
     * contract and the tier needs no codes component. */
   def ensureSemPath(spark: SparkSession, dir: String): String = {
-    val s = sig(spark, dir)
+    val (s, fp) = sigAndFp(spark, dir)
     val cp = componentPath("sem", "cents", s)
     if (!ready(cp)) {
       sweep(cp, s)
@@ -484,7 +478,7 @@ object AnnIndex {
         .fit(train.withColumn("fv", array_to_vector(col("v"))))
       writeAtomic(centsDf(spark, model), cp)
     }
-    recordFp(s, dir)
+    recordFp(s, fp)
     cp
   }
 }

@@ -45,9 +45,7 @@ import graft.util.Cols._
   * repartitioning (all counts are exact integers; selection is totally
   * ordered by (count desc, left, right)).
   */
-object Bpe {
-
-  type Q = (SparkSession, String) => DataFrame
+object Bpe extends graft.Registry {
 
   // merge-map key separator: a control char that can never appear in a
   // token (tokens are [a-z]+ runs, "</w>", and their concatenations), so

@@ -26,9 +26,7 @@ import graft.llm.TextOps.{hash48Sql, toks, ToksSql}
   * pure function. Two exchanges total beyond the scan (pinned in
   * PlanShapeSpec).
   */
-object CorpusPipeline {
-
-  type Q = (SparkSession, String) => DataFrame
+object CorpusPipeline extends graft.Registry {
 
   private val pipe: Q = (spark, dir) => {
     import spark.implicits._

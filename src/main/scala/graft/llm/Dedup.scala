@@ -32,9 +32,7 @@ import graft.llm.TextOps._
   *    [[Similarity]]; an unrestricted exact pairwise pass is quadratic and
   *    exists only as the verification kernel on candidates.
   */
-object Dedup {
-
-  type Q = (SparkSession, String) => DataFrame
+object Dedup extends graft.Registry {
 
   /** Exact dedup: group by content hash, keep the smallest doc_id as
     * canonical. One shuffle on the 128-bit hash — at 100 TB this is the

@@ -18,9 +18,7 @@ import graft.util.Cols._
   * duration/slide groups (4× here) BEFORE the partial agg — the same
   * expansion any engine pays; keep slide ≥ duration/4 at warehouse scale.
   */
-object EventWindows {
-
-  type Q = (SparkSession, String) => DataFrame
+object EventWindows extends graft.Registry {
 
   /** Tumbling 1-hour windows × event_type. */
   private val tumbling: Q = (spark, dir) => {

@@ -39,9 +39,7 @@ import graft.Tables
   * initialized once per task, and the payload column is prunable for
   * metadata-only queries (frame-sample never touches it).
   */
-object Multimodal {
-
-  type Q = (SparkSession, String) => DataFrame
+object Multimodal extends graft.Registry {
 
   /** Deterministic pixel pattern — the contract shared by the encode
     * kernel and the DuckDB oracles. Intrinsic dims are small (4..19 ×

@@ -39,9 +39,7 @@ import graft.Tables
   *   s(d, Q) = Σ_{t ∈ Q} idf(t) · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
   * with k1 = 1.2, b = 0.75.
   */
-object Retrieval {
-
-  type Q = (SparkSession, String) => DataFrame
+object Retrieval extends graft.Registry {
 
   /** The fixed demo query — terms present in the synthetic corpus. */
   val QueryTerms: Seq[String] = Seq("spark", "join", "window")

@@ -31,9 +31,7 @@ import graft.Tables
   * shuffle once on bucket/centroid id (bounded fanout per key) and the
   * centroid table broadcasts.
   */
-object Similarity {
-
-  type Q = (SparkSession, String) => DataFrame
+object Similarity extends graft.Registry {
 
   val TopK = 5
   val NumQueryVecs = 10 // probe set: vec_id < 10

@@ -44,9 +44,7 @@ import graft.Tables
   *    to (Spark plans it as the equi-join on key with a per-key
   *    quadratic filter; fine for 150 users, fatal for 150 M).
   */
-object TemporalJoins {
-
-  type Q = (SparkSession, String) => DataFrame
+object TemporalJoins extends graft.Registry {
 
   /** Backward as-of join: for each `left` row, attach the payload of the
     * single latest `right` row with `rightTs < leftTs` (strict, the

@@ -21,7 +21,7 @@ import graft.Tables
   *    shuffles in this file's consumers are the dedup pair-joins in
   *    [[Dedup]], which are bucketed by shingle/band — never all-pairs.
   */
-object TextOps {
+object TextOps extends graft.Registry {
 
   /** 2^48 modulus for rolling hashes. */
   val M48: Long = 281474976710656L
@@ -145,8 +145,6 @@ object TextOps {
       (m, h) => least(m, h))
 
   // ---- declared queries --------------------------------------------
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Token/length/quality statistics per document. */
   private val stats: Q = (spark, dir) => {

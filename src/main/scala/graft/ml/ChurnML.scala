@@ -32,7 +32,7 @@ import graft.queries.Churn
   * is MLlib's distributed per-node split-stats aggregation; nothing here
   * collects the dataset to the driver.
   */
-object ChurnML {
+object ChurnML extends graft.Registry {
 
   /** Wide-table column groups — the reference's 21 continuous + 16
     * categorical split (RF/randomforest_churn.scala:236-241). */
@@ -356,8 +356,6 @@ object ChurnML {
   // ------------------------------------------------------------------
   // Declared operator queries
   // ------------------------------------------------------------------
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** M1 as an oracle-checkable query: the StringIndexer dictionary for
     * orders.o_orderpriority under frequencyDesc (ties alphabetical —

@@ -16,9 +16,7 @@ import graft.llm.TextOps.{hash48, hash48Sql}
   * query with a DuckDB oracle; the scale notes per query say why each
   * plan survives a 1000-executor corpus.
   */
-object Analytics {
-
-  type Q = (SparkSession, String) => DataFrame
+object Analytics extends graft.Registry {
 
   /** Size-adaptive pin level for the catalog-scale cached graph tables
     * — moved to [[graft.util.Storage.adaptiveLevel]] (r8: j8_setsim_join

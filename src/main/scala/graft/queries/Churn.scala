@@ -24,9 +24,7 @@ import graft.util.Cols._
   * The window+distinct spelling itself is kept alive in
   * [[Relational.queries]] ("w14_window_rfm") for operator fidelity.
   */
-object Churn {
-
-  type Q = (SparkSession, String) => DataFrame
+object Churn extends graft.Registry {
 
   /** Customer-group flags (RF:140-152): output column, CJK label, PTY ids. */
   val Groups: Seq[(String, String, Seq[Int])] = Seq(

@@ -18,9 +18,7 @@ import graft.util.Cols._
   *  - money math in decimal space (see graft.util.Cols) for cross-engine
   *    exactness without sacrificing codegen.
   */
-object Relational {
-
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends graft.Registry {
 
   // ---- S1: scan + date-range predicate + projection (RF/randomforest_churn.scala:43-45)
   private val s1: Q = (spark, dir) => {
@@ -665,10 +663,10 @@ object Relational {
   // SURVEY §9 audit) — while candidates drop 6.9M → 2.0M at sf0.1, and,
   // unlike brand-only, block sizes track the NAME VOCABULARY: on a
   // salted 10× catalog (vocabulary grows with the catalog, as real ones
-  // do) candidates grow ~linearly where brand-only grows ~100×
-  // (Profile `fuzzy` probe). ~12 keys/row (2 tokens × (len+1) variants)
-  // is the indexing cost — linear, map-side; see [[j7Candidates]] for
-  // why the candidate join is split into exact/near paths. The DISTINCT
+  // do) candidates grow ~linearly where brand-only grows ~100×.
+  // ~12 keys/row (2 tokens × (len+1) variants) is the indexing cost —
+  // linear, map-side; see [[j7Candidates]] for why the candidate join
+  // is split into exact/near paths. The DISTINCT
   // collapses multi-key collisions before the O(len²) DP; the
   // length-delta prefilter and the levenshtein THRESHOLD overload
   // (early-exits the DP past 2) carry over from r7.
@@ -678,9 +676,9 @@ object Relational {
   // splits the edit budget over two token regions. (A 5-token TPC-H
   // name would need the same scheme with ≤ 2 destroyed tokens of 5 —
   // exact token share — i.e. a weaker key and FEWER candidates.)
-  /** The blocking stage of j7, exposed for the Profile `fuzzy` probe:
-    * distinct candidate pairs that collide on ≥ 1 (brand, token-pos,
-    * SymSpell del-1 variant) key and pass the length-delta prefilter.
+  /** The blocking stage of j7: distinct candidate pairs that collide on
+    * ≥ 1 (brand, token-pos, SymSpell del-1 variant) key and pass the
+    * length-delta prefilter.
     *
     * Two disjoint join paths keep the pre-distinct volume at ~1× the
     * candidate count (a single all-variants self-join measured 10.4M
@@ -707,7 +705,7 @@ object Relational {
     * at small scale (4.3 → 3.4 s at sf0.1: sorting narrow key rows
     * beats building two 240k-row hash relations), 13.0 s at 10×,
     * 147.6 s at 100× where both hash variants died. */
-  def j7Candidates(spark: SparkSession, dir: String): DataFrame = {
+  private def j7Candidates(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val p = Tables.load(spark, dir, "part")
       .select($"p_partkey", $"p_name", $"p_brand")

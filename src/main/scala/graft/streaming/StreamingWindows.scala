@@ -38,7 +38,7 @@ private[streaming] object Micros extends Serializable {
   * explicit timeout — the pattern for state Spark's built-ins can't
   * express.
   */
-object StreamingWindows {
+object StreamingWindows extends graft.Registry {
 
   val EventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -439,8 +439,6 @@ object StreamingWindows {
       }
     spark.readStream.schema(schema).parquet(dir)
   }
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** st_sessionize: the flatMapGroupsWithState sessionizer run as a
     * finite drain over the events table. With a single data batch the

@@ -91,6 +91,29 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
+  test("ensure records exactly the fingerprint its sig was resolved from") {
+    import spark.implicits._
+    // A corpus of its own, so the ensure below trains a new sig dir and
+    // its `_FP` sidecar starts empty.
+    val d = tmpDir("graft-annidx-fp")
+    (0 until 160).map { i =>
+      (i.toLong, Array.tabulate(AnnIndex.Dim)(j =>
+        ((i * 31 + j * 7) % 97) / 97f - 0.5f))
+    }.toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
+    val dir = d.toString
+    val fp = AnnIndex.fsFingerprint(dir)
+    val s = AnnIndex.sig(spark, dir)
+    val comps = Seq("cents", "codes").map(AnnIndex.componentPath("ivf", _, s))
+    comps.foreach(p => graft.util.Scratch.deleteRecursively(Paths.get(p)))
+    val (kp, cp) = AnnIndex.ensureIvfPaths(spark, dir)
+    assert(Seq(kp, cp) == comps)
+    comps.foreach { p =>
+      assert(AnnIndex.storedFps(Paths.get(p)) == Seq(fp), s"_FP of $p")
+      graft.util.Scratch.deleteRecursively(Paths.get(p))
+    }
+    graft.util.Scratch.deleteRecursively(d)
+  }
+
   test("corpus signature is value-sensitive, not just id-sensitive") {
     import spark.implicits._
     // Two corpora with IDENTICAL vec_ids whose vectors differ — the

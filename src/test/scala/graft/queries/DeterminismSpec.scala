@@ -1,6 +1,8 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.SparkSession
+
+import graft.{Registry, SparkEntry, SparkSpec}
 
 /** Partition-invariance law: a declared query's RESULT must be a pure
   * function of the data, not of the cluster shape. On a real cluster the
@@ -27,6 +29,24 @@ class DeterminismSpec extends SparkSpec {
   private def runSorted(name: String): Seq[String] = {
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect().map(_.toString).sorted.toSeq
+  }
+
+  test("the registry rejects a key declared twice and an oracle with no query") {
+    def module(qs: Seq[String], os: Seq[String]): Registry = new Registry {
+      val queries: Map[String, Q] = qs.map(_ -> ((s: SparkSession, _: String) =>
+        s.emptyDataFrame)).toMap
+      val oracles: Map[String, String] = os.map(_ -> "SELECT 1").toMap
+    }
+    val shared = intercept[IllegalArgumentException](SparkEntry.merge(
+      Seq(module(Seq("a", "b"), Seq("a")), module(Seq("b"), Nil))))
+    assert(shared.getMessage.contains("query keys declared by more than one"))
+    val orphan = intercept[IllegalArgumentException](SparkEntry.merge(
+      Seq(module(Seq("a"), Seq("a", "c")))))
+    assert(orphan.getMessage.contains("oracles that name no query: c"))
+
+    assert(SparkEntry.modules.map(_.queries.size).sum == 227)
+    assert(SparkEntry.queries.size == 227)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
   for (name <- queries) {
