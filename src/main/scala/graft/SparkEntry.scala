@@ -2,15 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** A module's part of the query registry: its entries and the DuckDB
-  * oracles for those of them that have one. */
+/** One registry entry: the query and, where the result is SQL-checkable,
+  * its DuckDB oracle. */
+final case class Op(name: String, run: SparkEntry.Q,
+                    oracle: Option[String] = None)
+
+/** A module's part of the query registry. */
 trait Registry {
   type Q = SparkEntry.Q
-  def queries: Map[String, Q]
-  def oracles: Map[String, String]
+  def ops: Seq[Op]
 }
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry (SURVEY.md §7), derived from the modules' [[Op]]s.
   *
   * `queries`: one entry per implemented operator from SURVEY.md §2 (plus
   * the LLM-data-pipeline extensions). Each takes (spark, sfDir) and reads
@@ -47,27 +50,23 @@ object SparkEntry {
     graft.eval.Metrics,
     graft.streaming.StreamingWindows)
 
-  /** Unions the modules' maps. Fails if two modules declare one key or an
-    * oracle names no query. */
-  private[graft] def merge(
-      modules: Seq[Registry]): (Map[String, Q], Map[String, String]) = {
-    def union[V](what: String,
-                 maps: Seq[(Registry, Map[String, V])]): Map[String, V] = {
-      val dups = maps.flatMap { case (m, kv) => kv.keys.map(_ -> m) }
-        .groupMap(_._1)(_._2.getClass.getName.stripSuffix("$"))
-        .collect { case (k, ms) if ms.size > 1 => s"$k (${ms.mkString(", ")})" }
-      require(dups.isEmpty,
-        s"$what keys declared by more than one module: " +
-          dups.toSeq.sorted.mkString("; "))
-      maps.flatMap(_._2).toMap
-    }
-    val qs = union("query", modules.map(m => m -> m.queries))
-    val os = union("oracle", modules.map(m => m -> m.oracles))
-    val orphans = os.keySet -- qs.keySet
-    require(orphans.isEmpty,
-      "oracles that name no query: " + orphans.toSeq.sorted.mkString(", "))
-    (qs, os)
+  /** The modules' entries, in module order. Fails if a name is declared
+    * more than once. */
+  private[graft] def merge(modules: Seq[Registry]): Seq[Op] = {
+    val dups = modules.flatMap(m => m.ops.map(_.name -> m))
+      .groupMap(_._1)(_._2.getClass.getName.stripSuffix("$"))
+      .collect { case (k, ms) if ms.size > 1 => s"$k (${ms.mkString(", ")})" }
+    require(dups.isEmpty,
+      "query keys declared more than once: " + dups.toSeq.sorted.mkString("; "))
+    modules.flatMap(_.ops)
   }
 
-  val (queries, oracleSql) = merge(modules)
+  private[graft] val ops: Seq[Op] = merge(modules)
+
+  /** Every entry's query by name (a `Map[String, Q]`). */
+  val queries = ops.map(o => o.name -> o.run).toMap
+
+  /** The oracle of every entry that has one, by name. */
+  val oracleSql: Map[String, String] =
+    ops.flatMap(o => o.oracle.map(o.name -> _)).toMap
 }

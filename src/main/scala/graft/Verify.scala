@@ -1,28 +1,40 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected entry's result → parquet, plus
+  * oracle_sql.json holding the oracles of exactly those entries, for the
+  * DuckDB compare (tools/check_oracle.py).
+  *
+  * Usage: Verify <sfDir> <outDir> [q1,q2,...]  (default: every entry) */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional 3rd arg: comma-separated query-name filter (dev iteration).
-    val selected: Map[String, SparkEntry.Q] =
-      if (args.length > 2) {
-        val keep = args(2).split(",").toSet
-        SparkEntry.queries.filter { case (k, _) => keep(k) }
-      } else SparkEntry.queries
+    val selected = select(args.lift(2))
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { op =>
+      try op.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${op.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${op.name} failed: ${e.getMessage}")
       }
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(selected))
+    spark.stop()
+  }
+
+  /** The registry entries named in a comma-separated filter, or all. */
+  def select(filter: Option[String]): Seq[Op] = filter match {
+    case Some(names) =>
+      val keep = names.split(",").toSet
+      SparkEntry.ops.filter(op => keep(op.name))
+    case None => SparkEntry.ops
+  }
+
+  /** oracle_sql.json: name → oracle SQL for the entries that have one. */
+  def oracleJson(ops: Seq[Op]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in an oracle would otherwise make the checker's
+    // json.load fail and silently zero the correctness check.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -32,9 +44,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    ops.flatMap(op => op.oracle.map(sql => s"${q(op.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.llm.TextOps.{hash48, hash48Sql}
 import graft.util.Cols._
 
@@ -493,23 +493,10 @@ object Encoders extends graft.Registry {
           .cast("long")).otherwise(0L).as("z_ppm"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "enc_feature_hash"  -> featureHash,
-    "m25_standard_scaler" -> standardScaler,
-    "m12_target_apply"  -> targetApply,
-    "m22_corr"          -> corrMatrix,
-    "m12_target_encode" -> targetEncode,
-    "m13_woe_iv"        -> woeIv,
-    "m14_quantile_bins" -> quantileBins,
-    "m15_minmax_scaler" -> minmaxScaler,
-    "m16_robust_scaler" -> robustScaler,
-    "m20_chi2_rank"     -> chi2Rank,
-    "m21_impute_fit"    -> imputeFit)
-
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // identical IEEE chain: exact HUGEINT stats → double, sqrt is
     // correctly rounded, floor needs no tie rule
-    "m25_standard_scaler" ->
+    Op("m25_standard_scaler", standardScaler, Some(
       """WITH c AS (
         |  SELECT c_custkey,
         |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -527,11 +514,11 @@ object Encoders extends graft.Registry {
         |            THEN CAST(floor(((cents - CAST(sx AS DOUBLE) / n)
         |                   / sqrt(varp)) * 1e6) AS BIGINT)
         |            ELSE CAST(0 AS BIGINT) END AS z_ppm
-        |FROM c, v""".stripMargin,
+        |FROM c, v""".stripMargin)),
 
     // the m12 oracle's encoder CTE joined back onto every customer,
     // with the identical prior-fallback coalesce
-    "m12_target_apply" ->
+    Op("m12_target_apply", targetApply, Some(
       s"""WITH lab AS (
          |  SELECT o_custkey,
          |         MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS pos
@@ -551,11 +538,11 @@ object Encoders extends graft.Registry {
          |  FROM seg, p)
          |SELECT c.c_custkey, c.c_mktsegment,
          |       COALESCE(enc.te_smooth, p.prior) AS te
-         |FROM customer c LEFT JOIN enc USING (c_mktsegment), p""".stripMargin,
+         |FROM customer c LEFT JOIN enc USING (c_mktsegment), p""".stripMargin)),
 
     // all operands are non-negative by construction (abs), so plain //
     // is the same floor the Spark side spells with pmod subtraction
-    "m22_corr" ->
+    Op("m22_corr", corrMatrix, Some(
       """WITH l AS (
         |  SELECT CAST(l_quantity AS BIGINT) AS q,
         |         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS e,
@@ -586,9 +573,9 @@ object Encoders extends graft.Registry {
         |       CAST(CASE WHEN vx > 0 AND vy > 0
         |            THEN (((abs(num) * 1000000) // vx) * abs(num)) // vy
         |            ELSE 0 END AS BIGINT) AS r2_ppm
-        |FROM p""".stripMargin,
+        |FROM p""".stripMargin)),
 
-    "m14_quantile_bins" ->
+    Op("m14_quantile_bins", quantileBins, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS ok,
         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -599,18 +586,18 @@ object Encoders extends graft.Registry {
         |  FROM o)
         |SELECT CAST(FLOOR(10 * (rk - 1) / n_tot) AS BIGINT) AS bin,
         |       COUNT(*) AS n, MIN(cents) AS lo_cents, MAX(cents) AS hi_cents
-        |FROM r GROUP BY 1""".stripMargin,
+        |FROM r GROUP BY 1""".stripMargin)),
 
-    "enc_feature_hash" ->
+    Op("enc_feature_hash", featureHash, Some(
       s"""WITH f AS (
          |  SELECT event_id, list_sort(list_distinct([
          |    ${hash48Sql("'et:' || event_type")} % 1024,
          |    ${hash48Sql("'hr:' || CAST(hour(CAST(ts AS TIMESTAMP)) AS VARCHAR)")} % 1024,
          |    ${hash48Sql("'uk:' || CAST(user_id % 64 AS VARCHAR)")} % 1024])) AS idx
          |  FROM events)
-         |SELECT event_id, unnest(idx) AS feature_idx FROM f""".stripMargin,
+         |SELECT event_id, unnest(idx) AS feature_idx FROM f""".stripMargin)),
 
-    "m20_chi2_rank" ->
+    Op("m20_chi2_rank", chi2Rank, Some(
       s"""WITH lab AS (
          |  SELECT o_custkey,
          |         MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS pos
@@ -656,9 +643,9 @@ object Encoders extends graft.Registry {
          |  FROM m GROUP BY 1),
          |nvals AS (SELECT feature, COUNT(*) AS n_values FROM cells GROUP BY 1)
          |SELECT feature, n_values, n_values - 1 AS dof, chi2_milli
-         |FROM nvals JOIN agg USING (feature)""".stripMargin,
+         |FROM nvals JOIN agg USING (feature)""".stripMargin)),
 
-    "m21_impute_fit" ->
+    Op("m21_impute_fit", imputeFit, Some(
       s"""WITH c AS (
          |  SELECT c_custkey, c_mktsegment, c_nationkey,
          |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -682,9 +669,9 @@ object Encoders extends graft.Registry {
          |          ORDER BY cnt DESC, c_nationkey ASC) AS rn FROM g)
          |  WHERE rn = 1)
          |SELECT c_mktsegment, n_obs, n_missing, mean_fill_cents, mode_fill_nation
-         |FROM mnv JOIN md USING (c_mktsegment)""".stripMargin,
+         |FROM mnv JOIN md USING (c_mktsegment)""".stripMargin)),
 
-    "m13_woe_iv" ->
+    Op("m13_woe_iv", woeIv, Some(
       """WITH v AS (
         |  SELECT o_orderpriority,
         |         CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS BIGINT) AS n_good,
@@ -709,9 +696,9 @@ object Encoders extends graft.Registry {
         |SELECT o_orderpriority, n_good, n_bad, woe_micro,
         |       CAST((iv_num - (((iv_num % iv_den) + iv_den) % iv_den))
         |         // iv_den AS BIGINT) AS iv_milli
-        |FROM x""".stripMargin,
+        |FROM x""".stripMargin)),
 
-    "m12_target_encode" ->
+    Op("m12_target_encode", targetEncode, Some(
       s"""WITH lab AS (
          |  SELECT o_custkey,
          |         MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS pos
@@ -727,12 +714,12 @@ object Encoders extends graft.Registry {
          |SELECT c_mktsegment, n_train, n_pos,
          |       ${roundRatio2Sql("n_pos * 100", "n_train")} AS rate,
          |       (n_pos + 20.0 * prior) / (n_train + 20.0) AS te_smooth
-         |FROM seg, p""".stripMargin,
+         |FROM seg, p""".stripMargin)),
 
     // naive truth: one global ROW_NUMBER (fine for an oracle); the
     // positive-mod subtraction makes // exact so floor-vs-truncate
     // cannot diverge on negative numerators
-    "m16_robust_scaler" ->
+    Op("m16_robust_scaler", robustScaler, Some(
       """WITH c AS (
         |  SELECT c_custkey,
         |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -752,9 +739,9 @@ object Encoders extends graft.Registry {
         |                 % (p75 - p25))
         |              // (p75 - p25) AS BIGINT)
         |       ELSE CAST(0 AS BIGINT) END AS scaled_ppm
-        |FROM c, q""".stripMargin,
+        |FROM c, q""".stripMargin)),
 
-    "m15_minmax_scaler" ->
+    Op("m15_minmax_scaler", minmaxScaler, Some(
       """WITH c AS (
         |  SELECT c_custkey,
         |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -764,5 +751,5 @@ object Encoders extends graft.Registry {
         |       CASE WHEN hi > lo
         |            THEN CAST(((cents - lo) * 1000000) // (hi - lo) AS BIGINT)
         |            ELSE CAST(0 AS BIGINT) END AS scaled_ppm
-        |FROM c, t""".stripMargin)
+        |FROM c, t""".stripMargin)))
 }

@@ -1,13 +1,11 @@
 package graft.encode
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** The reference's featindex dictionary codec + LibSVM I/O
   * (S4/S5/K6; FM/fm_libsvm/libsvm_transform.py:1-24 and the 186-entry
@@ -162,17 +160,12 @@ object FeatIndex extends graft.Registry {
 
   /** K6 write + S4 read (Spark's libsvm source → (label, SparseVector)).
     *
-    * Writes DISTRIBUTED part files by default — the readers (Spark's
-    * libsvm source and the reference's loaders) glob a directory, so
-    * nothing needs one file, and `coalesce(1)` would serialize the whole
-    * dataset through a single task (the round-3 verdict's one flagged
-    * scale-killer). `singleFile = true` keeps the old shape as an
-    * explicit opt-in for fixture-fidelity use only. */
-  def writeLibsvmText(lines: DataFrame, path: String,
-                      singleFile: Boolean = false): Unit = {
-    val out = if (singleFile) lines.coalesce(1) else lines
-    out.write.mode("overwrite").text(path)
-  }
+    * Writes DISTRIBUTED part files — the readers (Spark's libsvm source
+    * and the reference's loaders) glob a directory, so nothing needs one
+    * file, and `coalesce(1)` would serialize the whole dataset through a
+    * single task. */
+  def writeLibsvmText(lines: DataFrame, path: String): Unit =
+    lines.write.mode("overwrite").text(path)
 
   def readLibsvm(spark: SparkSession, path: String, numFeatures: Int): DataFrame =
     spark.read.format("libsvm")
@@ -224,10 +217,6 @@ object FeatIndex extends graft.Registry {
         .as("value"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "enc_featindex_dict"    -> dictQ,
-    "enc_libsvm_roundtrip"  -> roundtripQ)
-
   private val dictSql =
     """WITH vals AS (
       |  SELECT 0 AS field_idx, CAST(o_orderpriority AS VARCHAR) AS raw_value
@@ -242,14 +231,15 @@ object FeatIndex extends graft.Registry {
       |      AS global_idx
       |  FROM vals)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "enc_featindex_dict" -> (dictSql + "\nSELECT field_idx, raw_value, global_idx FROM d"),
-    "enc_libsvm_roundtrip" -> (dictSql +
+  val ops: Seq[Op] = Seq(
+    Op("enc_featindex_dict", dictQ,
+      Some(dictSql + "\nSELECT field_idx, raw_value, global_idx FROM d")),
+    Op("enc_libsvm_roundtrip", roundtripQ, Some(dictSql +
       """
         |SELECT CAST(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS VARCHAR)
         |  || ' ' || CAST(d0.global_idx AS VARCHAR) || ':1 '
         |  || CAST(d1.global_idx AS VARCHAR) || ':1' AS value
         |FROM orders o
         |JOIN d d0 ON d0.field_idx = 0 AND d0.raw_value = CAST(o.o_orderpriority AS VARCHAR)
-        |JOIN d d1 ON d1.field_idx = 1 AND d1.raw_value = CAST(o.o_orderstatus AS VARCHAR)""".stripMargin))
+        |JOIN d d1 ON d1.field_idx = 1 AND d1.raw_value = CAST(o.o_orderstatus AS VARCHAR)""".stripMargin)))
 }

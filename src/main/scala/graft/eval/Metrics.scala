@@ -5,6 +5,8 @@ import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Op
+
 /** Evaluation operators E1-E4 (reference: RF/utils.scala:49-86 and its
   * near-duplicate GBDT/spark/utils.scala:58-95).
   *
@@ -202,13 +204,8 @@ object Metrics extends graft.Registry {
           .as("precision_contrib_ppm"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "e5_pr_curve"    -> prCurve,
-    "e6_calibration" -> calibrationTable,
-    "e7_multiclass_confusion" -> multiclassConfusion)
-
-  val oracles: Map[String, String] = Map(
-    "e5_pr_curve" -> {
+  val ops: Seq[Op] = Seq(
+    Op("e5_pr_curve", prCurve, Some {
       val h = graft.llm.TextOps.hash48Sql("'sc:' || CAST(c_custkey AS VARCHAR)")
       s"""WITH lab AS (
          |  SELECT o_custkey,
@@ -235,9 +232,9 @@ object Metrics extends graft.Registry {
          |            THEN CAST((tp * 2000000) // (2 * tp + fp + fn) AS BIGINT)
          |            ELSE 0 END AS f1_ppm
          |FROM c""".stripMargin
-    },
+    }),
 
-    "e7_multiclass_confusion" -> {
+    Op("e7_multiclass_confusion", multiclassConfusion, Some {
       val h1 = graft.llm.TextOps.hash48Sql("'mc:' || CAST(o_orderkey AS VARCHAR)")
       val h2 = graft.llm.TextOps.hash48Sql("'mp:' || CAST(o_orderkey AS VARCHAR)")
       s"""WITH cls AS (SELECT ['1-URGENT', '2-HIGH', '3-MEDIUM',
@@ -258,9 +255,9 @@ object Metrics extends graft.Registry {
          |       CAST((n * 1000000) // n_predicted AS BIGINT)
          |         AS precision_contrib_ppm
          |FROM cells JOIN rt USING (actual) JOIN ct USING (predicted)""".stripMargin
-    },
+    }),
 
-    "e6_calibration" -> {
+    Op("e6_calibration", calibrationTable, Some {
       val h = graft.llm.TextOps.hash48Sql("'sc:' || CAST(c_custkey AS VARCHAR)")
       s"""WITH lab AS (
          |  SELECT o_custkey,
@@ -278,5 +275,5 @@ object Metrics extends graft.Registry {
          |       CAST(abs((sum_s * 1000) // n - (n_pos * 1000000) // n)
          |         AS BIGINT) AS gap_ppm
          |FROM g""".stripMargin
-    })
+    }))
 }

@@ -3,7 +3,7 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Z-order (Morton-curve) data layout — the 100 TB data-SKIPPING lever
   * the scan family (S1/S9) reads through: writing files clustered on an
@@ -123,10 +123,6 @@ object Layout extends graft.Registry {
           % lit(281474976710656L)).cast("long").as("checksum48"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "k8_zorder" -> zorder,
-    "k9_shard_manifest" -> shardManifest)
-
   private def spreadSql(x: String): String = {
     val a = s"($x & 65535)"
     val b = s"(($a | ($a << 8)) & 16711935)"
@@ -135,8 +131,8 @@ object Layout extends graft.Registry {
     s"(($d | ($d << 1)) & 1431655765)"
   }
 
-  val oracles: Map[String, String] = Map(
-    "k8_zorder" -> {
+  val ops: Seq[Op] = Seq(
+    Op("k8_zorder", zorder, Some {
       val c16 = "CASE WHEN c_hi > c_lo THEN CAST(floor(((o_custkey - c_lo) * 65535) / (c_hi - c_lo)) AS BIGINT) ELSE 0 END"
       val d16 = "CASE WHEN d_hi > d_lo THEN CAST(floor(((day - d_lo) * 65535) / (d_hi - d_lo)) AS BIGINT) ELSE 0 END"
       s"""WITH o AS (
@@ -150,13 +146,13 @@ object Layout extends graft.Registry {
          |SELECT o_orderkey, cust16, day16,
          |       ${spreadSql("cust16")} | (${spreadSql("day16")} << 1) AS zval
          |FROM v""".stripMargin
-    },
+    }),
     // Mirrors shardManifest stage for stage: same hash, same adaptive
     // shard count, same fixed-width key-string total order, same mod-2^48
     // checksum fold. `//` is DuckDB's floor division (positive operands
     // here, matching Cols.floorDiv); count(*)/sum are cast to BIGINT so
     // the dtype gate sees the Spark longs.
-    "k9_shard_manifest" -> {
+    Op("k9_shard_manifest", shardManifest, Some {
       val h = graft.llm.TextOps.hash48Sql("'sh:' || CAST(doc_id AS VARCHAR)")
       s"""WITH d AS (SELECT doc_id, n_chars, $h AS h FROM documents),
          |s AS (SELECT least(greatest(count(*) // 64, 4), 4096) AS s FROM d),
@@ -172,5 +168,5 @@ object Layout extends graft.Registry {
          |       CAST(sum(CAST(h AS DECIMAL(38,0))) % 281474976710656
          |         AS BIGINT) AS checksum48
          |FROM k GROUP BY 1""".stripMargin
-    })
+    }))
 }

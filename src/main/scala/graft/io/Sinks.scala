@@ -7,7 +7,7 @@ import org.apache.spark.ml.feature.StringIndexer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.util.Cols._
 import graft.llm.TextOps.hash48Sql
 
@@ -456,46 +456,27 @@ object Sinks extends graft.Registry {
           .as("sum_good_cents"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "s15_json_quarantine"   -> s15,
-    "j16_dpp"               -> j16,
-    "k10_dynamic_overwrite" -> k10,
-    "s14_csv_quirks"   -> s14,
-    "k9_compaction"    -> k9,
-    "s2_csv_scan"      -> s2,
-    "s10_json_roundtrip" -> s10,
-    "s13_orc_roundtrip"  -> s13,
-    "s11_schema_merge" -> s11,
-    "k1_save_as_table" -> k1,
-    "k2_model_persist" -> k2,
-    "k3_jdbc_roundtrip"-> k3,
-    "k4_kv_rows"       -> k4,
-    "j4_bucketed_join" -> j4,
-    "s9_partition_pruning" -> s9,
-    "k7_text_dump"     -> k7,
-    "f11_sigmoid"      -> f11)
-
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // replays the 1-in-13 corruption rule directly
-    "s15_json_quarantine" ->
+    Op("s15_json_quarantine", s15, Some(
       """SELECT COUNT(*) AS n_rows,
         |       CAST(SUM(CASE WHEN o_orderkey % 13 = 0 THEN 1 ELSE 0 END)
         |         AS BIGINT) AS n_quarantined,
         |       CAST(SUM(CASE WHEN o_orderkey % 13 = 0 THEN 0
         |                ELSE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
         |                  AS BIGINT) END) AS BIGINT) AS sum_good_cents
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
 
     // only the dimension-surviving partition contributes
-    "j16_dpp" ->
+    Op("j16_dpp", j16, Some(
       """SELECT o_orderstatus, COUNT(*) AS n,
         |       CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
         |         AS BIGINT)) AS BIGINT) AS sum_cents
-        |FROM orders WHERE o_orderstatus = 'F' GROUP BY 1""".stripMargin,
+        |FROM orders WHERE o_orderstatus = 'F' GROUP BY 1""".stripMargin)),
 
     // the post-restatement table: F rows halved (floor — cents are
     // non-negative so // is the shiftright twin), siblings untouched
-    "k10_dynamic_overwrite" ->
+    Op("k10_dynamic_overwrite", k10, Some(
       """WITH o AS (
         |  SELECT o_orderstatus,
         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -504,30 +485,30 @@ object Sinks extends graft.Registry {
         |SELECT o_orderstatus, COUNT(*) AS n,
         |       CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN cents // 2
         |                ELSE cents END) AS BIGINT) AS sum_cents
-        |FROM o GROUP BY 1""".stripMargin,
+        |FROM o GROUP BY 1""".stripMargin)),
 
-    "s14_csv_quirks" ->
+    Op("s14_csv_quirks", s14, Some(
       """SELECT o_orderkey,
         |       o_orderpriority || ', "q"' || chr(10) || o_orderstatus AS note
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
 
     // the audit row recomputed from the source table; the file counts
     // follow from the declared sizing rule (64 round-robin writers with
     // rows >= 64; ceil(rows/20k) compacted files)
-    "k9_compaction" ->
+    Op("k9_compaction", k9, Some(
       """SELECT COUNT(*) AS n_rows,
         |       CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
         |         AS BIGINT) AS sum_cents,
         |       CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_keys,
         |       CAST(64 AS BIGINT) AS n_files_before,
         |       CAST((COUNT(*) + 19999) // 20000 AS BIGINT) AS n_files_after
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
 
-    "s2_csv_scan" ->
+    Op("s2_csv_scan", s2, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice,
         |       CAST(o_orderdate AS DATE) AS order_date, o_orderpriority
-        |FROM orders""".stripMargin,
-    "s11_schema_merge" ->
+        |FROM orders""".stripMargin)),
+    Op("s11_schema_merge", s11, Some(
       s"""WITH o AS (
          |  SELECT o_orderstatus,
          |         ${hash48Sql("CAST(o_orderkey AS VARCHAR)")} % 2 = 0 AS is_v1,
@@ -536,48 +517,48 @@ object Sinks extends graft.Registry {
          |SELECT o_orderstatus, COUNT(*) AS n,
          |       CAST(SUM(CASE WHEN is_v1 THEN 1 ELSE 0 END) AS BIGINT) AS n_legacy,
          |       SUM(CASE WHEN is_v1 THEN 0 ELSE rev_cents END) / 100.0 AS sum_v2_price
-         |FROM o GROUP BY 1""".stripMargin,
+         |FROM o GROUP BY 1""".stripMargin)),
 
-    "s10_json_roundtrip" ->
+    Op("s10_json_roundtrip", s10, Some(
       """SELECT event_id, user_id, event_type, value,
         |       strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f')
         |         AS ts_iso
-        |FROM events""".stripMargin,
-    "s13_orc_roundtrip" ->
+        |FROM events""".stripMargin)),
+    Op("s13_orc_roundtrip", s13, Some(
       """SELECT event_id, user_id, event_type, value,
         |       strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f')
         |         AS ts_iso
-        |FROM events""".stripMargin,
-    "k1_save_as_table" ->
-      "SELECT o_orderstatus, COUNT(*) AS n FROM orders GROUP BY o_orderstatus",
-    "k2_model_persist" ->
+        |FROM events""".stripMargin)),
+    Op("k1_save_as_table", k1, Some(
+      "SELECT o_orderstatus, COUNT(*) AS n FROM orders GROUP BY o_orderstatus")),
+    Op("k2_model_persist", k2, Some(
       """SELECT o_orderpriority AS value,
         |       row_number() OVER (ORDER BY count(*) DESC, o_orderpriority) - 1 AS idx
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "k3_jdbc_roundtrip" ->
-      "SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name FROM region",
-    "k4_kv_rows" ->
+        |FROM orders GROUP BY o_orderpriority""".stripMargin)),
+    Op("k3_jdbc_roundtrip", k3, Some(
+      "SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name FROM region")),
+    Op("k4_kv_rows", k4, Some(
       """SELECT substr(md5(CAST(o_custkey AS VARCHAR)), 1, 5) || '_' ||
         |         CAST(o_custkey AS VARCHAR) AS rowkey,
         |       '[' || array_to_string(
         |         list_sort(list(CAST(o_orderkey AS VARCHAR))), ',') || ']'
         |         AS recommend
-        |FROM orders GROUP BY o_custkey""".stripMargin,
-    "j4_bucketed_join" ->
+        |FROM orders GROUP BY o_custkey""".stripMargin)),
+    Op("j4_bucketed_join", j4, Some(
       """SELECT o_orderpriority, COUNT(*) AS n,
         |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    "s9_partition_pruning" ->
+        |GROUP BY o_orderpriority""".stripMargin)),
+    Op("s9_partition_pruning", s9, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
-        |FROM orders WHERE o_orderstatus = 'F'""".stripMargin,
-    "k7_text_dump" ->
+        |FROM orders WHERE o_orderstatus = 'F'""".stripMargin)),
+    Op("k7_text_dump", k7, Some(
       """SELECT CAST(o_orderkey AS VARCHAR) || ',' ||
         |       printf('%.9f', 1.0 / (1.0 + exp(-CAST((o_orderkey % 13) - 6 AS DOUBLE))))
         |       AS value
-        |FROM orders""".stripMargin,
-    "f11_sigmoid" ->
+        |FROM orders""".stripMargin)),
+    Op("f11_sigmoid", f11, Some(
       """SELECT o_orderkey, CAST((o_orderkey % 13) - 6 AS DOUBLE) AS x,
         |       1.0 / (1.0 + exp(-CAST((o_orderkey % 13) - 6 AS DOUBLE))) AS sigmoid
-        |FROM orders""".stripMargin)
+        |FROM orders""".stripMargin)))
 }

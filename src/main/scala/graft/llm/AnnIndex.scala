@@ -153,7 +153,11 @@ object AnnIndex {
     * never share a sidecar line) plus every data file's
     * (name, size, mtime). */
   private[llm] def fsFingerprint(dir: String): String =
-    s"${Paths.get(dir).toAbsolutePath.normalize}::${fsListing(dir)}"
+    fpPrefix(dir) + fsListing(dir)
+
+  /** The prefix every fingerprint of the corpus in `dir` starts with. */
+  private[llm] def fpPrefix(dir: String): String =
+    s"${Paths.get(dir).toAbsolutePath.normalize}::"
 
   private def fsListing(dir: String): String = {
     val p = Paths.get(dir, "embeddings.parquet")
@@ -207,31 +211,34 @@ object AnnIndex {
     }
   }
 
-  /** Store hygiene, run before any train (ADVICE r11 #3/#5):
-    *  - prune sibling `sig=*` artifacts of the SAME TIER (identical
-    *    row-count component, different value/id components) — those are
-    *    regenerated-corpus leftovers, exactly one per driver round, and
-    *    they both grow the store unboundedly and shift the oracle's
-    *    componentGlob file list (DuckDB cardinality estimates move with
-    *    it — an oracle green in one environment could flip to a
-    *    join-order bomb in the driver's). OTHER tiers' artifacts are
-    *    kept deliberately: the driver's round interleaves sf tiers
-    *    (verify sf0.01 → bench sf0.1 → scale gates sf1/sf10), and
-    *    pruning across tiers would force a retrain inside the first
-    *    TIMED bench entry after every verify. The store is therefore
-    *    bounded at one dir per tier, stable round-over-round.
+  /** Store hygiene, run before `dir`'s corpus trains `keepSig`:
+    *  - prune sibling `sig=*` artifacts whose `_FP` sidecar names the
+    *    same corpus directory: a corpus regenerated in place leaves one
+    *    such leftover per generation, and they both grow the store
+    *    unboundedly and shift the oracle's componentGlob file list
+    *    (DuckDB cardinality estimates move with it — an oracle green in
+    *    one environment could flip to a join-order bomb in another).
+    *    Other corpora's artifacts are kept, also at an equal row count
+    *    (sf0.001 and sf0.01 both hold 500 embeddings): sf tiers
+    *    interleave (verify sf0.01 → bench sf0.1 → scale gates sf1/sf10),
+    *    and pruning across them would force a retrain inside the first
+    *    timed bench entry after every verify. A sibling without a
+    *    sidecar names no corpus and is kept. The store is therefore
+    *    bounded at one dir per corpus directory.
     *  - sweep `_tmp-*` leftovers from writers that died between the
     *    parquet write and the rename. Only dead writers' temps are
     *    swept (pid suffix no longer alive) — a live concurrent
     *    trainer's in-flight temp is left alone. */
-  private[llm] def sweep(component: String, keepSig: String): Unit = {
+  private[llm] def sweep(component: String, keepSig: String,
+                         dir: String): Unit = {
     val parent = Paths.get(component).getParent
     if (parent != null && Files.isDirectory(parent)) {
       val keep = s"sig=$keepSig"
-      val tier = s"sig=${keepSig.takeWhile(_ != '_')}_"
+      val corpus = fpPrefix(dir)
       Files.list(parent).forEach { p =>
         val n = p.getFileName.toString
-        val staleSig = n.startsWith(tier) && n != keep
+        val staleSig = n.startsWith("sig=") && n != keep &&
+          storedFps(p).exists(_.startsWith(corpus))
         val deadTmp = n.startsWith("_tmp-") && {
           val pid = n.substring(n.lastIndexOf('-') + 1)
           pid.nonEmpty && pid.forall(_.isDigit) &&
@@ -386,7 +393,7 @@ object AnnIndex {
     val bp = componentPath("pq", "books", s)
     val cp = componentPath("pq", "codes", s)
     if (!ready(bp) || !ready(cp)) {
-      sweep(bp, s); sweep(cp, s)
+      sweep(bp, s, dir); sweep(cp, s, dir)
       val (books, codes) = trainPq(spark, dir)
       writeAtomic(booksDf(spark, books), bp)
       writeAtomic(codes.coalesce(8), cp)
@@ -407,7 +414,7 @@ object AnnIndex {
     val kp = componentPath("ivf", "cents", s)
     val cp = componentPath("ivf", "codes", s)
     if (!ready(kp) || !ready(cp)) {
-      sweep(kp, s); sweep(cp, s)
+      sweep(kp, s, dir); sweep(cp, s, dir)
       val (model, codes) = trainIvf(spark, dir)
       writeAtomic(centsDf(spark, model), kp)
       writeAtomic(codes.coalesce(8), cp)
@@ -429,7 +436,7 @@ object AnnIndex {
     val bp = componentPath("ivfpq", "books", s)
     val cp = componentPath("ivfpq", "codes", s)
     if (!ready(kp) || !ready(bp) || !ready(cp)) {
-      sweep(kp, s); sweep(bp, s); sweep(cp, s)
+      sweep(kp, s, dir); sweep(bp, s, dir); sweep(cp, s, dir)
       val (coarse, books, codes) = trainIvfPq(spark, dir)
       writeAtomic(centsDf(spark, coarse), kp)
       writeAtomic(booksDf(spark, books), bp)
@@ -468,7 +475,7 @@ object AnnIndex {
     val (s, fp) = sigAndFp(spark, dir)
     val cp = componentPath("sem", "cents", s)
     if (!ready(cp)) {
-      sweep(cp, s)
+      sweep(cp, s, dir)
       val e = emb(spark, dir)
       val k = semK(s.takeWhile(_ != '_').toLong)
       val train = e.filter(

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.util.Cols._
 
 /** Byte-pair-encoding tokenizer TRAINING and application — the piece of
@@ -200,12 +200,10 @@ object Bpe extends graft.Registry {
         roundRatio2($"sum_chars" * 100, $"n_tokens").as("chars_per_token"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "d_bpe_train"  -> bpeTrain,
-    "d_bpe_encode" -> bpeEncode)
-
   /** Iterative array fixpoint — not SQL-expressible; verified by
     * BpeSpec planted truth + round-trip + determinism laws (see the
     * no-oracle table, SURVEY §8). */
-  val oracles: Map[String, String] = Map.empty
+  val ops: Seq[Op] = Seq(
+    Op("d_bpe_train", bpeTrain),
+    Op("d_bpe_encode", bpeEncode))
 }

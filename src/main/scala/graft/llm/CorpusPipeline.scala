@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.llm.TextOps.{hash48Sql, toks, ToksSql}
 
 /** The corpus-prep pipeline, composed end-to-end as ONE declared query —
@@ -52,10 +52,8 @@ object CorpusPipeline extends graft.Registry {
           .as("split"))
   }
 
-  val queries: Map[String, Q] = Map("pipe_corpus_prep" -> pipe)
-
-  val oracles: Map[String, String] = Map(
-    "pipe_corpus_prep" -> {
+  val ops: Seq[Op] = Seq(
+    Op("pipe_corpus_prep", pipe, Some {
       val stops = TextOps.Stopwords.map(s => s"'$s'").mkString(",")
       s"""WITH t AS (SELECT doc_id, text, $ToksSql AS w FROM documents),
          |m AS (SELECT doc_id,
@@ -92,5 +90,5 @@ object CorpusPipeline extends graft.Registry {
          |         THEN 'val'
          |       ELSE 'test' END AS split
          |FROM s""".stripMargin
-    })
+    }))
 }

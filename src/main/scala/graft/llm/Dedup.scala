@@ -4,7 +4,7 @@ import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.llm.TextOps._
 
 /** Deduplication operators over `documents` (+ embedding near-dup over
@@ -873,28 +873,6 @@ object Dedup extends graft.Registry {
         ppm($"tp", $"n_true").as("rec_ppm"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "dedup_sketch_eval"   -> sketchEval,
-    "dedup_substring"     -> substringSpans,
-    "dedup_exact"         -> exact,
-    "dedup_stop_shingles" -> ((s, d) => stopShingles(s, d, maxShingleDf = 3L)),
-    "dedup_ngram_jaccard" -> ((s, d) => ngramJaccard(s, d)),
-    "dedup_containment"   -> ((s, d) => containment(s, d)),
-    "dedup_incremental"   -> ((s, d) =>
-      ngramJaccardIncremental(s, d, isNew = _ % 10 === 0)),
-    "dedup_clusters"      -> ((s, d) => nearDupClusters(s, d)),
-    "dedup_canonical"     -> ((s, d) => canonicalKeep(s, d)),
-    "dedup_clusters_simhash" -> ((s, d) => simhashClusters(s, d)),
-    "dedup_simhash"       -> ((s, d) => simhashDedup(s, d)),
-    "dedup_minhash"       -> ((s, d) => minhashDedup(s, d)),
-    "dedup_minhash_ml"    -> ((s, d) => minhashMl(s, d)),
-    "dedup_embedding"     -> ((s, d) => embeddingNearDup(s, d)),
-    "dedup_embedding_lsh" -> ((s, d) => embeddingNearDupLsh(s, d)),
-    "dedup_clusters_embedding" -> ((s, d) => embeddingClusters(s, d)),
-    "dedup_semdedup"      -> ((s, d) => semDedup(s, d)),
-    "d_contamination"     -> ((s, d) => contamination(s, d)),
-    "d_contamination_bloom" -> ((s, d) => contaminationBloom(s, d)))
-
   // ---- DuckDB oracles ----------------------------------------------
 
   private val shCte =
@@ -1072,15 +1050,16 @@ object Dedup extends graft.Registry {
        |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.8""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "d_contamination" -> contaminationSql,
-    "d_contamination_bloom" -> contaminationSql,
+  val ops: Seq[Op] = Seq(
+    Op("d_contamination", (s, d) => contamination(s, d), Some(contaminationSql)),
+    Op("d_contamination_bloom", (s, d) => contaminationBloom(s, d),
+      Some(contaminationSql)),
 
-    "dedup_exact" ->
+    Op("dedup_exact", exact, Some(
       """SELECT md5(text) AS fp, MIN(doc_id) AS canonical_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY md5(text)""".stripMargin,
+        |FROM documents GROUP BY md5(text)""".stripMargin)),
 
-    "dedup_substring" ->
+    Op("dedup_substring", substringSpans, Some(
       s"""WITH sp0 AS (
          |  SELECT doc_id, text,
          |         unnest(generate_series(1, length(text) - 39)) AS p
@@ -1099,22 +1078,22 @@ object Dedup extends graft.Registry {
          |SELECT doc.doc_id,
          |       CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans,
          |       CAST(COALESCE(a.n_dup, 0) AS BIGINT) AS n_dup
-         |FROM documents doc LEFT JOIN a ON a.doc_id = doc.doc_id""".stripMargin,
+         |FROM documents doc LEFT JOIN a ON a.doc_id = doc.doc_id""".stripMargin)),
 
-    "dedup_stop_shingles" ->
+    Op("dedup_stop_shingles", (s, d) => stopShingles(s, d, maxShingleDf = 3L), Some(
       s"""$shCte,
          |inv AS (SELECT doc_id, unnest(sh) AS tok0 FROM s),
          |g AS (SELECT ${hash48Sql("tok0")} AS tok,
          |             COUNT(DISTINCT doc_id) AS df, MIN(tok0) AS shingle
          |      FROM inv GROUP BY 1)
-         |SELECT tok, shingle, df FROM g WHERE df > 3""".stripMargin,
+         |SELECT tok, shingle, df FROM g WHERE df > 3""".stripMargin)),
 
-    "dedup_ngram_jaccard" -> ngramPairsOracleSql,
+    Op("dedup_ngram_jaccard", (s, d) => ngramJaccard(s, d), Some(ngramPairsOracleSql)),
 
     // sketch quality gate: nest the two production pair oracles verbatim
     // (prediction = banded MinHash, truth = exact n-gram Jaccard) and
     // reduce their full-outer join to one integer metric row.
-    "dedup_sketch_eval" ->
+    Op("dedup_sketch_eval", sketchEval, Some(
       s"""WITH pred AS (SELECT id_a, id_b FROM ($minhashPairsOracleSql) mp),
          |truth AS (SELECT id_a, id_b FROM ($ngramPairsOracleSql) tp),
          |m AS (
@@ -1131,9 +1110,9 @@ object Dedup extends graft.Registry {
          |                 ELSE 0 END AS BIGINT) AS prec_ppm,
          |       CAST(CASE WHEN n_true > 0 THEN tp * 1000000 // n_true
          |                 ELSE 0 END AS BIGINT) AS rec_ppm
-         |FROM m""".stripMargin,
+         |FROM m""".stripMargin)),
 
-    "dedup_containment" ->
+    Op("dedup_containment", (s, d) => containment(s, d), Some(
       s"""$shCte,
          |inv AS (SELECT DISTINCT doc_id, tok FROM (
          |  SELECT doc_id, unnest(list_transform(sh, s -> ${hash48Sql("s")})) AS tok FROM s)),
@@ -1150,9 +1129,10 @@ object Dedup extends graft.Registry {
          |       CAST(inter AS DOUBLE) / LEAST(sa.n, sb.n) AS containment,
          |       CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
          |FROM pair JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-         |WHERE CAST(inter AS DOUBLE) / LEAST(sa.n, sb.n) >= 0.8""".stripMargin,
+         |WHERE CAST(inter AS DOUBLE) / LEAST(sa.n, sb.n) >= 0.8""".stripMargin)),
 
-    "dedup_incremental" ->
+    Op("dedup_incremental", (s, d) =>
+      ngramJaccardIncremental(s, d, isNew = _ % 10 === 0), Some(
       // the full pair statement restricted to pairs touching the "new
       // batch" (doc_id % 10 = 0) — df/cap/verify identical to
       // dedup_ngram_jaccard; only corpus×corpus pairs are excluded
@@ -1170,25 +1150,25 @@ object Dedup extends graft.Registry {
          |SELECT id_a, id_b,
          |       CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
          |FROM pair JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-         |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8""".stripMargin,
+         |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8""".stripMargin)),
 
-    "dedup_simhash" -> simhashPairsSql,
+    Op("dedup_simhash", (s, d) => simhashDedup(s, d), Some(simhashPairsSql)),
 
-    "dedup_clusters_simhash" ->
+    Op("dedup_clusters_simhash", (s, d) => simhashClusters(s, d), Some(
       // same min-label CC shape as dedup_clusters, over the simhash
       // pair graph (the whole pairs statement nests as a CTE body)
       s"""WITH RECURSIVE nd AS MATERIALIZED ($simhashPairsSql),
-         |${ccLabelTailSql("doc_id", "documents")}""".stripMargin,
+         |${ccLabelTailSql("doc_id", "documents")}""".stripMargin)),
 
-    "dedup_clusters" -> {
+    Op("dedup_clusters", (s, d) => nearDupClusters(s, d), Some {
       // min-label CC of the ngram near-dup graph via recursive CTE;
       // canonical = min node of the component (incl. self)
       s"""$ngramCcCtesSql
          |SELECT d.doc_id, COALESCE(c.canonical_id, d.doc_id) AS canonical_id
          |FROM documents d LEFT JOIN canon c ON c.doc_id = d.doc_id""".stripMargin
-    },
+    }),
 
-    "dedup_canonical" -> {
+    Op("dedup_canonical", (s, d) => canonicalKeep(s, d), Some {
       // same closure; the final select keeps the LONGEST member per
       // cluster (ties → larger doc_id) via ROW_NUMBER — an independent
       // spelling of the Spark side's max(struct(n_chars, doc_id))
@@ -1203,19 +1183,21 @@ object Dedup extends graft.Registry {
          |         ROW_NUMBER() OVER (PARTITION BY cluster_id
          |           ORDER BY n_chars DESC, doc_id DESC) AS rk
          |  FROM lab) WHERE rk = 1""".stripMargin
-    },
+    }),
 
-    "dedup_minhash" -> minhashPairsOracleSql,
+    Op("dedup_minhash", (s, d) => minhashDedup(s, d), Some(minhashPairsOracleSql)),
+    Op("dedup_minhash_ml", (s, d) => minhashMl(s, d)),
 
-    "dedup_embedding_lsh" -> embeddingLshPairsSql,
+    Op("dedup_embedding_lsh", (s, d) => embeddingNearDupLsh(s, d),
+      Some(embeddingLshPairsSql)),
 
-    "dedup_clusters_embedding" ->
+    Op("dedup_clusters_embedding", (s, d) => embeddingClusters(s, d), Some(
       // same transitive-closure shape as the other two cluster oracles,
       // over the embedding-LSH pair graph; canonical per vec_id
       s"""WITH RECURSIVE nd AS MATERIALIZED ($embeddingLshPairsSql),
-         |${ccLabelTailSql("vec_id", "embeddings")}""".stripMargin,
+         |${ccLabelTailSql("vec_id", "embeddings")}""".stripMargin)),
 
-    "dedup_embedding" ->
+    Op("dedup_embedding", (s, d) => embeddingNearDup(s, d), Some(
       s"""WITH p AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
         |  WHERE vec_id < ${Similarity.NumQueryVecs}),
@@ -1227,16 +1209,16 @@ object Dedup extends graft.Registry {
         |FROM p a JOIN e b ON a.vec_id < b.vec_id
         |WHERE list_reduce(list_prepend(0.0::DOUBLE,
         |    list_transform(list_zip(a.v, b.v), x -> x[1] * x[2])),
-        |    (acc, x) -> acc + x) >= 0.30""".stripMargin,
+        |    (acc, x) -> acc + x) >= 0.30""".stripMargin)),
 
     // SemDeDup replay from the persisted sem/cents artifact (the ANN-
     // store oracle convention: hive sig= partition filtered to the
     // signature recomputed from the corpus). Assignment is the same
     // argmin fold the engine runs in-plan; the witness join carries the
     // priority predicate INSIDE the ON clause; every CTE feeding a join
-    // is staged MATERIALIZED (the r11 gate lesson — never hand an
-    // estimate-blind CTE pipeline a join order to get wrong).
-    "dedup_semdedup" ->
+    // is staged MATERIALIZED (never hand an estimate-blind CTE pipeline
+    // a join order to get wrong).
+    Op("dedup_semdedup", (s, d) => semDedup(s, d), Some(
       s"""WITH sg AS (${AnnIndex.sigSql}),
          |ct AS MATERIALIZED (SELECT list_id, cent
          |      FROM read_parquet('${AnnIndex.componentGlob("sem", "cents")}',
@@ -1271,5 +1253,5 @@ object Dedup extends graft.Registry {
          |          (acc, x) -> acc + x) >= 0.30)
          |SELECT av.vec_id, CAST(av.list_id AS BIGINT) AS list_id,
          |       (w.vec_id IS NOT NULL) AS is_dup
-         |FROM av LEFT JOIN w ON w.vec_id = av.vec_id""".stripMargin)
+         |FROM av LEFT JOIN w ON w.vec_id = av.vec_id""".stripMargin)))
 }

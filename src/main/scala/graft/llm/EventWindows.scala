@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.util.Cols._
 
 /** Event-time window aggregations over the `events` table — the batch
@@ -101,16 +101,10 @@ object EventWindows extends graft.Registry {
       .agg(count(lit(1)).as("n"), max($"late_us").as("max_late_us"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "ev_lateness_audit" -> lateness,
-    "ev_tumbling" -> tumbling,
-    "ev_sliding"  -> sliding,
-    "ev_session"  -> session)
-
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // same per-user previous-arrivals running max in exact µs integers,
     // same planted 0-2h arrival jitter
-    "ev_lateness_audit" -> {
+    Op("ev_lateness_audit", lateness, Some {
       val hj = graft.llm.TextOps.hash48Sql(
         "'arr:' || CAST(event_id AS VARCHAR)")
       s"""WITH e AS (
@@ -134,16 +128,16 @@ object EventWindows extends graft.Registry {
         |            ELSE '5_gt_12h' END AS bucket,
         |       COUNT(*) AS n, CAST(MAX(late_us) AS BIGINT) AS max_late_us
         |FROM l GROUP BY 1""".stripMargin
-    },
+    }),
 
-    "ev_tumbling" ->
+    Op("ev_tumbling", tumbling, Some(
       """SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS w_start,
         |       time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) + INTERVAL '1 hour' AS w_end,
         |       event_type, COUNT(*) AS n,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
+        |FROM events GROUP BY 1, 2, 3""".stripMargin)),
 
-    "ev_sliding" ->
+    Op("ev_sliding", sliding, Some(
       """WITH x AS (
         |  SELECT CAST(ts AS TIMESTAMP) AS t, value,
         |         time_bucket(INTERVAL '15 minutes', CAST(ts AS TIMESTAMP)) AS b
@@ -154,14 +148,14 @@ object EventWindows extends graft.Registry {
         |  WHERE b - (k * INTERVAL '15 minutes') > t - INTERVAL '1 hour')
         |SELECT w_start, w_start + INTERVAL '1 hour' AS w_end, COUNT(*) AS n,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM w GROUP BY 1, 2""".stripMargin,
+        |FROM w GROUP BY 1, 2""".stripMargin)),
 
     // Pre-aggregated by (user_id, ts) so the lag and cumulative-sum
     // windows run over DISTINCT timestamps: with raw rows, two separate
     // window operators could order tied timestamps differently and
     // split a tie across sessions nondeterministically. Tied rows are
     // always one session (gap 0), so the pre-agg is semantics-free.
-    "ev_session" ->
+    Op("ev_session", session, Some(
       """WITH e AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS t,
         |         COUNT(*) AS nr, SUM(CAST(value AS DECIMAL(18,2))) AS v
@@ -185,5 +179,5 @@ object EventWindows extends graft.Registry {
         |       MAX(t) + INTERVAL '30 minutes' AS s_end,
         |       CAST(SUM(nr) AS BIGINT) AS n_events,
         |       CAST(SUM(v) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sess""".stripMargin)
+        |FROM s GROUP BY user_id, sess""".stripMargin)))
 }

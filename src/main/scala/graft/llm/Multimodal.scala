@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed metadata,
   * with decode / feature-extract / resize / frame-sample stages.
@@ -428,13 +428,6 @@ object Multimodal extends graft.Registry {
       }(enc)
   }
 
-  val queries: Map[String, Q] = Map(
-    "mm_decode"        -> decodeQ,
-    "mm_resize"        -> resizeQ,
-    "mm_frame_sample"  -> framesQ,
-    "mm_phash_dedup"   -> phashQ,
-    "mm_audio_energy"  -> audioEnergyQ)
-
   /** Shared oracle fragment: the pixel-pattern CTE (id, w, h). */
   private val dimsCte =
     """WITH d AS (SELECT doc_id AS id, (doc_id % 16) + 4 AS w,
@@ -461,10 +454,10 @@ object Multimodal extends graft.Registry {
     (s"CAST(('0x' || substr(md5($hexes), 1, 12)) AS BIGINT)", lum)
   }
 
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // PNG is lossless, so decoded pixels == the generator formula; the
     // oracle recomputes fingerprint + luminance straight from it.
-    "mm_decode" -> {
+    Op("mm_decode", decodeQ, Some {
       val (fp, lum) = featureSql("w", "h", identity, identity)
       s"""$dimsCte
          |SELECT id AS media_id, CAST(w AS INT) AS width,
@@ -472,8 +465,8 @@ object Multimodal extends graft.Registry {
          |  $fp AS fp48,
          |  floor((($lum) * 1000 * 2 + w * h) / (w * h * 2)) / 1e6 AS luminance
          |FROM d""".stripMargin
-    },
-    "mm_resize" -> {
+    }),
+    Op("mm_resize", resizeQ, Some {
       val (fp, lum) = featureSql("ow", "oh",
         xo => s"(($xo) * w) // ow", yo => s"(($yo) * h) // oh")
       s"""$dimsCte,
@@ -486,16 +479,16 @@ object Multimodal extends graft.Registry {
          |  $fp AS fp48_out,
          |  floor((($lum) * 1000 * 2 + ow * oh) / (ow * oh * 2)) / 1e6 AS lum_out
          |FROM o""".stripMargin
-    },
-    "mm_frame_sample" ->
+    }),
+    Op("mm_frame_sample", framesQ, Some(
       """SELECT doc_id AS media_id,
         |  CAST((doc_id % 24) + 1 AS INT) AS n_frames,
         |  array_to_string(list_transform(generate_series(0, 3),
         |    i -> CAST(CAST(floor(i * ((doc_id % 24) + 1) / 4.0) AS BIGINT) AS VARCHAR)), ',')
         |    AS frame_ids
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
 
-    "mm_phash_dedup" -> {
+    Op("mm_phash_dedup", phashQ, Some {
       val (r, g, b) = chanSql("xs", "ys")
       s"""$dimsCte,
          |grid AS (
@@ -518,11 +511,11 @@ object Multimodal extends graft.Registry {
          |SELECT p.id AS media_id, p.phash,
          |       CAST(grp.n_same AS BIGINT) AS n_same, grp.canonical_id
          |FROM p JOIN grp USING (phash)""".stripMargin
-    },
+    }),
 
     // PCM16 round-trips samples losslessly, so frame energies == the
     // generator formula; the top-2 pick replays as a per-clip window.
-    "mm_audio_energy" ->
+    Op("mm_audio_energy", audioEnergyQ, Some(
       """WITH m AS (
         |  SELECT doc_id AS media_id,
         |         800 + (doc_id % 5) * 160 AS n FROM documents),
@@ -542,5 +535,5 @@ object Multimodal extends graft.Registry {
         |       CAST(n_frames AS BIGINT) AS n_frames, frame_idx, energy, rk
         |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY media_id
         |        ORDER BY energy DESC, frame_idx) AS rk FROM en)
-        |WHERE rk <= 2""".stripMargin)
+        |WHERE rk <= 2""".stripMargin)))
 }

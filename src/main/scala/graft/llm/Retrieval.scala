@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Sparse keyword retrieval over the documents corpus — the BM25 twin of
   * the dense-embedding ANN family in [[Similarity]]. A training-data
@@ -255,14 +255,8 @@ object Retrieval extends graft.Registry {
         fdl($"n_rel_ret" * 1000000L, $"n_rel_total").as("recall_ppm"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "d_bm25_topk" -> bm25,
-    "d_hybrid_rrf" -> hybridRrf,
-    "d_hybrid_rrf_served" -> hybridRrfServed,
-    "d_retrieval_eval" -> retrievalEval)
-
-  val oracles: Map[String, String] = Map(
-    "d_retrieval_eval" -> {
+  val ops: Seq[Op] = Seq(
+    Op("d_retrieval_eval", retrievalEval, Some {
       val termList = QueryTerms.map(t => s"'$t'").mkString(", ")
       val wList = DcgWeightsMicro.mkString("[", ", ", "]")
       s"""WITH t AS (SELECT doc_id, ${TextOps.ToksSql} AS w FROM documents),
@@ -322,9 +316,9 @@ object Retrieval extends graft.Registry {
          |       CAST((n_rel_ret * 1000000) // n_rel_total AS BIGINT)
          |         AS recall_ppm
          |FROM m1, m2, m3""".stripMargin
-    },
+    }),
 
-    "d_bm25_topk" -> {
+    Op("d_bm25_topk", bm25, Some {
       val termList = QueryTerms.map(t => s"'$t'").mkString(", ")
       s"""WITH t AS (SELECT doc_id, ${TextOps.ToksSql} AS w FROM documents),
          |tok AS (SELECT doc_id, unnest(w) AS term FROM t),
@@ -357,14 +351,14 @@ object Retrieval extends graft.Registry {
          |SELECT doc_id, score_micro, n_terms,
          |       row_number() OVER (ORDER BY score_micro DESC, doc_id) AS rk
          |FROM top""".stripMargin
-    },
+    }),
 
     // Mirrors hybridRrf stage for stage: same tokenization, rarest-term
     // query compression, BM25 integer-micro contribs (the d_bm25_topk
     // spelling), brute cosine ranks (the sim_topk_brute spelling), and
     // the exact 10⁹/(60+rank) RRF floors. Staging CTEs MATERIALIZED
     // (the j9/ADC rule).
-    "d_hybrid_rrf" -> {
+    Op("d_hybrid_rrf", hybridRrf, Some {
       val dotSql =
         """list_reduce(list_prepend(0.0::DOUBLE,
           |    list_transform(list_zip(q.qv, e.v), p -> p[1] * p[2])),
@@ -379,17 +373,17 @@ object Retrieval extends graft.Registry {
            |    SELECT *, row_number() OVER (PARTITION BY query_id
            |      ORDER BY cosine DESC, doc_id) AS r_dense FROM den0)
            |  WHERE r_dense <= 20)""".stripMargin)
-    },
+    }),
 
     // The served twin: dense ranks come from the IVF candidate scoring
     // fragment (the sim_topk_ivf routing over the persisted parquet
     // index), everything else shared with d_hybrid_rrf via hybridSql.
-    "d_hybrid_rrf_served" -> hybridSql(
+    Op("d_hybrid_rrf_served", hybridRrfServed, Some(hybridSql(
       s"""${Similarity.ivfScoredCteSql()},
          |de AS MATERIALIZED (SELECT query_id, doc_id, r_dense FROM (
          |    SELECT *, row_number() OVER (PARTITION BY query_id
          |      ORDER BY cosine DESC, doc_id) AS r_dense FROM i_sc)
-         |  WHERE r_dense <= 20)""".stripMargin))
+         |  WHERE r_dense <= 20)""".stripMargin))))
 
   /** The hybrid-RRF oracle chain parameterized by the DENSE block
     * (which must end with a `de(query_id, doc_id, r_dense)` CTE, ranks

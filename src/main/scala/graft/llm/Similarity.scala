@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Similarity search over the `embeddings` table (unit-norm float[64]).
   *
@@ -790,24 +790,6 @@ object Similarity extends graft.Registry {
         graft.util.Cols.ppm($"hits", lit(k.toLong)).as("recall_ppm"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "sim_centroid_topk" -> ((s, d) => centroidTopk(s, d)),
-    "sim_recall_eval" -> ((s, d) => recallEval(s, d)),
-    "sim_topk_brute" -> ((s, d) => topkBrute(s, d)),
-    "sim_topk_mmr"   -> ((s, d) => topkMmr(s, d)),
-    "sim_topk_mmr_served" -> ((s, d) => topkMmr(s, d, served = true)),
-    "sim_topk_lsh"   -> ((s, d) => topkLsh(s, d)),
-    "sim_topk_ivf"   -> ((s, d) => topkIvf(s, d)),
-    "sim_topk_filtered" -> ((s, d) => topkFiltered(s, d)),
-    "sim_topk_pq"    -> ((s, d) => topkPq(s, d)),
-    "sim_topk_ivfpq" -> ((s, d) => topkIvfPq(s, d)),
-    "sim_topk_ivfpq_cached" -> ((s, d) => topkIvfPqCached(s, d)),
-    "sim_index_update" -> ((s, d) => indexUpdate(s, d)),
-    "sim_index_stats"  -> ((s, d) => indexStats(s, d)),
-    "sim_knn_graph"  -> ((s, d) => knnGraph(s, d)),
-    "f13_higher_order" -> hof,
-    "f14_quantize"   -> quant)
-
   // ---- DuckDB oracles ----------------------------------------------
 
   private val dotSql =
@@ -997,34 +979,36 @@ object Similarity extends graft.Registry {
        |$finalSel""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    // bk/b staged MATERIALIZED defensively (VERDICT r11 "What's wrong"
-    // #2): same CTE-pipeline shape as the two gate bombs, lower degree.
-    "sim_index_update" ->
-      s"""WITH sg AS (${AnnIndex.sigSql}),
-         |bk AS MATERIALIZED (SELECT sub, code, cent
-         |       FROM read_parquet('${AnnIndex.componentGlob("pq", "books")}',
-         |                         hive_partitioning = 1), sg
-         |       WHERE sig = sg.s),
-         |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |b AS MATERIALIZED (SELECT vec_id, v FROM e
-         |      WHERE (CAST(('0x' || substr(md5('upd:' || CAST(vec_id AS VARCHAR)), 1, 12))
-         |               AS BIGINT) % 10) = 0),
-         |sc AS (SELECT b.vec_id, bk.sub, bk.code,
-         |         list_reduce(list_prepend(0.0::DOUBLE,
-         |           list_transform(list_zip(
-         |               list_slice(b.v, bk.sub * $subDim + 1, bk.sub * $subDim + $subDim),
-         |               bk.cent),
-         |             pp -> (pp[1] - pp[2]) * (pp[1] - pp[2]))),
-         |           (acc, x) -> acc + x) AS l2sq
-         |       FROM b, bk),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-         |        ORDER BY l2sq, code) AS rn FROM sc)
-         |SELECT vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code,
-         |       l2sq
-         |FROM r WHERE rn = 1""".stripMargin,
+  /** The `sim_index_update` oracle, shared verbatim by its streaming
+    * twin `st_index_update`. bk and b are staged MATERIALIZED so DuckDB
+    * cannot re-plan the CTE pipeline into a join-order blow-up. */
+  private[graft] val indexUpdateOracle: String =
+    s"""WITH sg AS (${AnnIndex.sigSql}),
+       |bk AS MATERIALIZED (SELECT sub, code, cent
+       |       FROM read_parquet('${AnnIndex.componentGlob("pq", "books")}',
+       |                         hive_partitioning = 1), sg
+       |       WHERE sig = sg.s),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |b AS MATERIALIZED (SELECT vec_id, v FROM e
+       |      WHERE (CAST(('0x' || substr(md5('upd:' || CAST(vec_id AS VARCHAR)), 1, 12))
+       |               AS BIGINT) % 10) = 0),
+       |sc AS (SELECT b.vec_id, bk.sub, bk.code,
+       |         list_reduce(list_prepend(0.0::DOUBLE,
+       |           list_transform(list_zip(
+       |               list_slice(b.v, bk.sub * $subDim + 1, bk.sub * $subDim + $subDim),
+       |               bk.cent),
+       |             pp -> (pp[1] - pp[2]) * (pp[1] - pp[2]))),
+       |           (acc, x) -> acc + x) AS l2sq
+       |       FROM b, bk),
+       |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id, sub
+       |        ORDER BY l2sq, code) AS rn FROM sc)
+       |SELECT vec_id, CAST(sub AS BIGINT) AS sub, CAST(code AS BIGINT) AS code,
+       |       l2sq
+       |FROM r WHERE rn = 1""".stripMargin
 
-    "sim_index_stats" ->
+  val ops: Seq[Op] = Seq(
+    Op("sim_index_update", (s, d) => indexUpdate(s, d), Some(indexUpdateOracle)),
+    Op("sim_index_stats", (s, d) => indexStats(s, d), Some(
       s"""WITH sg AS (${AnnIndex.sigSql}),
          |cd AS (SELECT vec_id, list_id
          |       FROM read_parquet('${AnnIndex.componentGlob("ivf", "codes")}',
@@ -1037,11 +1021,12 @@ object Similarity extends graft.Registry {
          |         AS share_ppm,
          |       CAST((CAST(n AS HUGEINT) * ${AnnIndex.NList} * 1000000) // total
          |         AS BIGINT) AS load_ppm
-         |FROM g, t""".stripMargin,
+         |FROM g, t""".stripMargin)),
 
     // The ADC lookup is JOIN-FREE (see adcLookupSql) and every staging
-    // CTE is MATERIALIZED — belt and braces against the r11 gate bomb.
-    "sim_topk_pq" ->
+    // CTE is MATERIALIZED, so DuckDB cannot pick a join order that
+    // blows up.
+    Op("sim_topk_pq", (s, d) => topkPq(s, d), Some(
       s"""WITH sg AS (${AnnIndex.sigSql}),
          |bk AS MATERIALIZED (SELECT sub, code, cent
          |       FROM read_parquet('${AnnIndex.componentGlob("pq", "books")}',
@@ -1061,9 +1046,10 @@ object Similarity extends graft.Registry {
          |sc AS MATERIALIZED (SELECT dt.query_id, c.vec_id, $adcLookupSql AS adc
          |       FROM cd c CROSS JOIN dt
          |       WHERE c.vec_id <> dt.query_id),
-         |$rerankTailSql""".stripMargin,
+         |$rerankTailSql""".stripMargin)),
+    Op("sim_topk_ivfpq", (s, d) => topkIvfPq(s, d)),
 
-    "sim_topk_ivf" ->
+    Op("sim_topk_ivf", (s, d) => topkIvf(s, d), Some(
       s"""WITH sg AS (${AnnIndex.sigSql}),
          |ct AS (SELECT list_id, cent
          |       FROM read_parquet('${AnnIndex.componentGlob("ivf", "cents")}',
@@ -1090,14 +1076,14 @@ object Similarity extends graft.Registry {
          |        JOIN e ON e.vec_id = cand.vec_id),
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
          |        ORDER BY cosine DESC, neighbor_id) AS rank FROM sc2)
-         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin,
+         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin)),
 
     // sim_topk_ivf's shape with the over-probe widened to 4 lists and
     // the label predicate applied to the posting rows before the vector
     // join — the same stage order as the Spark side. CTEs staged
-    // MATERIALIZED defensively (the r11 lesson: never hand an
-    // estimate-blind CTE pipeline a join order to get wrong).
-    "sim_topk_filtered" ->
+    // MATERIALIZED defensively (never hand an estimate-blind CTE
+    // pipeline a join order to get wrong).
+    Op("sim_topk_filtered", (s, d) => topkFiltered(s, d), Some(
       s"""WITH sg AS (${AnnIndex.sigSql}),
          |ct AS MATERIALIZED (SELECT list_id, cent
          |       FROM read_parquet('${AnnIndex.componentGlob("ivf", "cents")}',
@@ -1125,14 +1111,14 @@ object Similarity extends graft.Registry {
          |        JOIN e ON e.vec_id = cand.vec_id),
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
          |        ORDER BY cosine DESC, neighbor_id) AS rank FROM sc2)
-         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin,
+         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin)),
 
     // Same join-free ADC + MATERIALIZED staging as sim_topk_pq — this
     // was the second of the two dt-join bomb oracles that emptied
     // CORRECTNESS_r11.json. `dt` carries one 128-entry residual
     // distance list per (query, probed list); `sc` is a single
     // list_id equi-join, nothing for the optimizer to misorder.
-    "sim_topk_ivfpq_cached" ->
+    Op("sim_topk_ivfpq_cached", (s, d) => topkIvfPqCached(s, d), Some(
       s"""WITH sg AS (${AnnIndex.sigSql}),
          |ct AS MATERIALIZED (SELECT list_id, cent
          |       FROM read_parquet('${AnnIndex.componentGlob("ivfpq", "cents")}',
@@ -1164,11 +1150,11 @@ object Similarity extends graft.Registry {
          |sc AS MATERIALIZED (SELECT dt.query_id, c.vec_id, $adcLookupSql AS adc
          |       FROM cd c JOIN dt ON dt.list_id = c.list_id
          |       WHERE c.vec_id <> dt.query_id),
-         |$rerankTailSql""".stripMargin,
+         |$rerankTailSql""".stripMargin)),
 
     // identical micro quantization, per-(label, dim) integer sums,
     // list(s ORDER BY dim) reassembly, and the left-fold dot
-    "sim_centroid_topk" ->
+    Op("sim_centroid_topk", (s, d) => centroidTopk(s, d), Some(
       """WITH m AS (
         |  SELECT label, i AS dim,
         |         CAST(round(CAST(embedding[i + 1] AS DOUBLE) * 1000000)
@@ -1196,9 +1182,9 @@ object Similarity extends graft.Registry {
         |           ORDER BY dotc DESC, vec_id ASC) AS rank
         |  FROM s)
         |SELECT label, CAST(rank AS BIGINT) AS rank, vec_id, dotc
-        |FROM r WHERE rank <= 10""".stripMargin,
+        |FROM r WHERE rank <= 10""".stripMargin)),
 
-    "f14_quantize" ->
+    Op("f14_quantize", quant, Some(
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |q AS (SELECT vec_id, v, list_min(v) AS lo, list_max(v) AS hi,
         |        greatest((list_max(v) - list_min(v)) / 255.0, 1e-12) AS scale FROM e),
@@ -1212,9 +1198,9 @@ object Similarity extends graft.Registry {
         |      list_transform(codes, cc -> lo + cc * scale)),
         |      p -> abs(p[1] - p[2]))),
         |    (a, b) -> CASE WHEN b > a THEN b ELSE a END), 6) AS max_abs_err
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin)),
 
-    "f13_higher_order" ->
+    Op("f13_higher_order", hof, Some(
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
         |                  len(embedding) AS dim FROM embeddings)
         |SELECT vec_id, CAST(dim AS BIGINT) AS dim,
@@ -1226,9 +1212,9 @@ object Similarity extends graft.Registry {
         |    list_transform(v, x -> CASE WHEN x > 0.5 THEN 0.5
         |      WHEN x < -0.5 THEN -0.5 ELSE x END)), (a, b) -> a + b)
         |    / dim, 6) AS mean_clip
-        |FROM e""".stripMargin,
+        |FROM e""".stripMargin)),
 
-    "sim_topk_brute" ->
+    Op("sim_topk_brute", (s, d) => topkBrute(s, d), Some(
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NumQueryVecs),
          |scored AS (
@@ -1236,14 +1222,14 @@ object Similarity extends graft.Registry {
          |  FROM q, e WHERE e.vec_id <> q.query_id),
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
          |        ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
-         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin,
+         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin)),
 
     // Mirrors topkMmr round for round: same candidate pool, the
     // same integer-micro quantization, and the greedy unrolled to
     // MmrK MATERIALIZED step pairs (pick argmax → drop picked + fold
     // maxsim) — generated by the same loop as the Spark side so the
     // two can never drift in round count or tie-break.
-    "sim_topk_mmr" -> mmrSql(
+    Op("sim_topk_mmr", (s, d) => topkMmr(s, d), Some(mmrSql(
       s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NumQueryVecs),
          |scored AS (
@@ -1253,14 +1239,14 @@ object Similarity extends graft.Registry {
          |    CAST(round(cosine * 1000000) AS BIGINT) AS rel_micro, v
          |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
          |          ORDER BY cosine DESC, doc_id) AS rk FROM scored)
-         |  WHERE rk <= $MmrCandidates)""".stripMargin),
+         |  WHERE rk <= $MmrCandidates)""".stripMargin))),
 
     // The SERVED twin: the pool is the persisted IVF tier's ranking
     // (same routed-candidate set + exact-cosine re-rank the
     // sim_topk_ivf oracle pins), the greedy identical — so the fused
     // output is hash-checked against the same parquet index artifacts
     // the Spark serve path reads.
-    "sim_topk_mmr_served" -> mmrSql(
+    Op("sim_topk_mmr_served", (s, d) => topkMmr(s, d, served = true), Some(mmrSql(
       s"""${ivfScoredCteSql()},
          |cand AS MATERIALIZED (SELECT query_id, doc_id,
          |    CAST(round(cosine * 1000000) AS BIGINT) AS rel_micro, v
@@ -1268,13 +1254,14 @@ object Similarity extends graft.Registry {
          |          row_number() OVER (PARTITION BY s.query_id
          |            ORDER BY s.cosine DESC, s.doc_id) AS rk
          |        FROM i_sc s JOIN i_e e ON e.vec_id = s.doc_id)
-         |  WHERE rk <= $MmrCandidates)""".stripMargin),
+         |  WHERE rk <= $MmrCandidates)""".stripMargin))),
 
     // Recall audit = the sim_topk_ivf pipeline (system under test) and
     // the sim_topk_brute pipeline (ground truth) composed in one
     // statement, hits counted per query. Store-reading and row_number-
-    // fed CTEs staged MATERIALIZED (the r11 gate lesson).
-    "sim_recall_eval" ->
+    // fed CTEs staged MATERIALIZED (never hand an estimate-blind CTE
+    // pipeline a join order to get wrong).
+    Op("sim_recall_eval", (s, d) => recallEval(s, d), Some(
       s"""WITH sg AS (${AnnIndex.sigSql}),
          |ct AS MATERIALIZED (SELECT list_id, cent
          |       FROM read_parquet('${AnnIndex.componentGlob("ivf", "cents")}',
@@ -1316,9 +1303,9 @@ object Similarity extends graft.Registry {
          |        AND ri.neighbor_id = rb.neighbor_id)
          |SELECT query_id, CAST(sum(hit) AS BIGINT) AS hits,
          |       CAST(sum(hit) * 1000000 // $TopK AS BIGINT) AS recall_ppm
-         |FROM h GROUP BY query_id""".stripMargin,
+         |FROM h GROUP BY query_id""".stripMargin)),
 
-    "sim_knn_graph" -> {
+    Op("sim_knn_graph", (s, d) => knnGraph(s, d), Some {
       val bandJoins = (0 until LshBands).map { b =>
         s"""SELECT qb.vec_id AS src, eb.vec_id AS dst
            |  FROM eb qb JOIN eb ON qb.b$b = eb.b$b
@@ -1338,9 +1325,9 @@ object Similarity extends graft.Registry {
          |        ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
          |SELECT src AS vec_id, neighbor_id, cosine, rank
          |FROM r WHERE rank <= $KnnK""".stripMargin
-    },
+    }),
 
-    "sim_topk_lsh" -> {
+    Op("sim_topk_lsh", (s, d) => topkLsh(s, d), Some {
       val bandJoins = (0 until LshBands).map { b =>
         s"""SELECT qb.vec_id AS query_id, eb.vec_id
            |  FROM eb qb JOIN eb ON qb.b$b = eb.b$b
@@ -1359,5 +1346,5 @@ object Similarity extends graft.Registry {
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
          |        ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
          |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= $TopK""".stripMargin
-    })
+    }))
 }

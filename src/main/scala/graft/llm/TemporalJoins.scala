@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Temporal joins over event streams — the two join shapes a
   * training-data / feature pipeline needs that plain equi-joins don't
@@ -216,17 +216,12 @@ object TemporalJoins extends graft.Registry {
         ($"vus" - $"pus").as("dt_us"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "ev_asof_join" -> asof,
-    "ev_range_join" -> range,
-    "j13_nearest_event" -> nearest)
-
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // DuckDB has a native ASOF JOIN — the strongest possible oracle for
     // the composed Spark spelling. events.ts ties at µs precision do not
     // occur in the testdata (asserted while designing; both engines
     // compare at µs once DuckDB casts TIMESTAMP_NS → TIMESTAMP).
-    "ev_asof_join" ->
+    Op("ev_asof_join", asof, Some(
       """WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
         |     v AS (SELECT * FROM events WHERE event_type = 'view')
         |SELECT p.event_id AS p_id, p.user_id AS user_id,
@@ -234,11 +229,11 @@ object TemporalJoins extends graft.Registry {
         |       v.event_id AS v_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
         |       v.value AS v_value
         |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND v.ts < p.ts""".stripMargin,
+        |  ON p.user_id = v.user_id AND v.ts < p.ts""".stripMargin)),
 
     // the naive truth: all in-range pairs ranked per purchase under the
     // same total order; epoch_us keeps Δt exact integer µs
-    "j13_nearest_event" ->
+    Op("j13_nearest_event", nearest, Some(
       """WITH p AS (SELECT event_id AS p_id, user_id,
         |             CAST(ts AS TIMESTAMP) AS p_ts FROM events
         |           WHERE event_type = 'purchase'),
@@ -254,9 +249,9 @@ object TemporalJoins extends graft.Registry {
         |  FROM p JOIN v ON v.user_id = p.user_id
         |   AND abs(epoch_us(v.v_ts) - epoch_us(p.p_ts)) <= 43200000000)
         |SELECT p_id, user_id, p_ts, v_id, v_ts, CAST(dt_us AS BIGINT) AS dt_us
-        |FROM c WHERE rk = 1""".stripMargin,
+        |FROM c WHERE rk = 1""".stripMargin)),
 
-    "ev_range_join" ->
+    Op("ev_range_join", range, Some(
       """SELECT p.event_id AS p_id, p.user_id AS user_id,
         |       CAST(p.ts AS TIMESTAMP) AS p_ts,
         |       v.event_id AS v_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
@@ -265,5 +260,5 @@ object TemporalJoins extends graft.Registry {
         |  ON v.user_id = p.user_id
         | AND CAST(v.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL '12 hours'
         | AND CAST(v.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)
-        |WHERE p.event_type = 'purchase' AND v.event_type = 'view'""".stripMargin)
+        |WHERE p.event_type = 'purchase' AND v.event_type = 'view'""".stripMargin)))
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * the `documents` table: token/length/quality stats, language-ID
@@ -1022,34 +1022,6 @@ object TextOps extends graft.Registry {
         phoneRe, "<PHONE>").as("clean_text"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "d_pii_scrub"      -> piiScrub,
-    "d_mask_tokens"    -> maskTokens,
-    "d_bigram_lm"      -> bigramLm,
-    "d_dataset_card"   -> datasetCard,
-    "d_repetition"     -> repetition,
-    "d_novelty"        -> novelty,
-    "d_lm_score"       -> lmScore,
-    "d_pack_sequences" -> packSeq,
-    "d_source_cap"     -> sourceCap,
-    "d_heavy_hitters"  -> heavyHitters,
-    "d_cms_eval"       -> cmsEval,
-    "d_mixture_plan"   -> mixturePlan,
-    "d_drift"          -> drift,
-    "d_winnow"         -> winnow,
-    "d_classifier_score" -> classifierScore,
-    "d_entropy"        -> entropy,
-    "d_chunk"          -> chunk,
-    "d_vocab_topk"     -> vocab,
-    "d_tfidf_topterms" -> tfidf,
-    "d_text_stats"     -> stats,
-    "d_lang_id"        -> langId,
-    "d_fingerprint"    -> fingerprint,
-    "d_simhash"        -> simhashQ,
-    "d_minhash_sig"    -> minhashSigQ,
-    "d_token_counts"   -> tokenCounts,
-    "d_quality_filter" -> qualityFilter)
-
   // ---- DuckDB oracles ----------------------------------------------
 
   /** DuckDB fragments mirroring the Spark building blocks. */
@@ -1084,10 +1056,10 @@ object TextOps extends graft.Registry {
   private def minhashSigSqlCols: String =
     (0 until MinHashK).map(j => s"${minhashSigSql(j)} AS s$j").mkString(",\n    ")
 
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // same planted augmentation, same RE2-safe patterns; DuckDB's
     // regexp_replace is first-match-only without the 'g' flag
-    "d_pii_scrub" -> {
+    Op("d_pii_scrub", piiScrub, Some {
       val he = hash48Sql("'pii:' || CAST(doc_id AS VARCHAR)")
       val hp = hash48Sql("'piiph:' || CAST(doc_id AS VARCHAR)")
       s"""WITH a AS (
@@ -1107,7 +1079,7 @@ object TextOps extends graft.Registry {
          |    '[a-z0-9.]+@[a-z0-9.]+\\.[a-z]+', '<EMAIL>', 'g'),
          |    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS clean_text
          |FROM a""".stripMargin
-    },
+    }),
     // HOF spelling, mirroring the Spark plan shape: per-doc
     // list_transform over generate_series — NO per-position row
     // explosion. The earlier unnest + ordered-string_agg spelling blew
@@ -1116,7 +1088,7 @@ object TextOps extends graft.Registry {
     // every sf the Spark side does. COALESCE pins the no-masked-token
     // doc to '' like Spark's empty array_join (array_to_string of the
     // empty filtered list is NULL in DuckDB).
-    "d_mask_tokens" -> {
+    Op("d_mask_tokens", maskTokens, Some {
       val h = hash48Sql(
         "'mk:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")
       s"""WITH d AS (
@@ -1136,11 +1108,11 @@ object TextOps extends graft.Registry {
          |         x -> x IS NOT NULL), ' '), '') AS target_text,
          |       CAST(len(list_filter(flags, x -> x)) AS BIGINT) AS n_masked
          |FROM f""".stripMargin
-    },
+    }),
 
     // 1-based list indexing (ts[i], ts[i+1]) mirrors Spark's 0-based
     // (ts[i-1], ts[i]) over the same i = 1..len-1 range
-    "d_bigram_lm" ->
+    Op("d_bigram_lm", bigramLm, Some(
       s"""WITH t AS (
          |  SELECT $ToksSql AS ts FROM documents WHERE doc_id % 2 = 0),
          |b AS (
@@ -1155,9 +1127,9 @@ object TextOps extends graft.Registry {
          |       CAST(((CAST(c AS HUGEINT) * 4 - 3) * 1000000) // (c1 * 4)
          |         AS BIGINT) AS p_micro
          |FROM c JOIN p USING (w1)
-         |ORDER BY c DESC, w1, w2 LIMIT 100""".stripMargin,
+         |ORDER BY c DESC, w1, w2 LIMIT 100""".stripMargin)),
 
-    "d_classifier_score" ->
+    Op("d_classifier_score", classifierScore, Some(
       s"""WITH d AS (
          |  SELECT doc_id,
          |         list_filter($ToksSql, t -> length(t) > 0) AS w
@@ -1176,9 +1148,9 @@ object TextOps extends graft.Registry {
          |  FROM f)
          |SELECT doc_id, COUNT(*) AS n_feat, CAST(SUM(wm) AS BIGINT) AS score_milli,
          |       CAST(CASE WHEN SUM(wm) >= 0 THEN 1 ELSE 0 END AS BIGINT) AS label
-         |FROM wt GROUP BY doc_id""".stripMargin,
+         |FROM wt GROUP BY doc_id""".stripMargin)),
 
-    "d_lm_score" ->
+    Op("d_lm_score", lmScore, Some(
       s"""WITH t0 AS (SELECT doc_id, doc_id % 2 = 0 AS is_a,
          |              unnest($ToksSql) AS term FROM documents),
          |t AS (SELECT * FROM t0 WHERE length(term) > 0),
@@ -1193,9 +1165,9 @@ object TextOps extends graft.Registry {
          |SELECT doc_id, COUNT(*) AS n_tok,
          |       floor((SUM(nll) * 2 + COUNT(*)) / (COUNT(*) * 2)) / 1000000.0
          |         AS avg_nll
-         |FROM b GROUP BY doc_id""".stripMargin,
+         |FROM b GROUP BY doc_id""".stripMargin)),
 
-    "d_novelty" ->
+    Op("d_novelty", novelty, Some(
       s"""WITH t AS (SELECT doc_id, $ToksSql AS w FROM documents),
          |s AS (SELECT doc_id, $ShinglesSql AS sh FROM t),
          |p AS (SELECT doc_id, unnest(list_transform(sh, x -> ${hash48Sql("x")})) AS tok FROM s),
@@ -1204,9 +1176,9 @@ object TextOps extends graft.Registry {
          |       CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
          |       CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS DOUBLE)
          |         / COUNT(*) AS novelty
-         |FROM p JOIN d USING (tok) GROUP BY doc_id""".stripMargin,
+         |FROM p JOIN d USING (tok) GROUP BY doc_id""".stripMargin)),
 
-    "d_winnow" ->
+    Op("d_winnow", winnow, Some(
       s"""WITH d AS (SELECT doc_id, $ToksSql AS w FROM documents),
          |g AS (SELECT doc_id,
          |  list_transform(generate_series(1, len(w)-2),
@@ -1218,9 +1190,9 @@ object TextOps extends graft.Registry {
          |  ELSE [list_min(g)] END AS m
          |  FROM g)
          |SELECT DISTINCT doc_id, fp FROM (
-         |  SELECT doc_id, unnest(m) AS fp FROM m)""".stripMargin,
+         |  SELECT doc_id, unnest(m) AS fp FROM m)""".stripMargin)),
 
-    "d_drift" ->
+    Op("d_drift", drift, Some(
       s"""WITH t AS (
          |  SELECT doc_id % 2 = 0 AS is_a, unnest($ToksSql) AS term
          |  FROM documents),
@@ -1238,9 +1210,9 @@ object TextOps extends graft.Registry {
          |ORDER BY abs(CAST(ROUND((ln((CAST(c_a AS DOUBLE) + 0.5) / (tot_a + 1.0))
          |      - ln((CAST(c_b AS DOUBLE) + 0.5) / (tot_b + 1.0))) * 1e6)
          |    AS BIGINT)) DESC, term
-         |LIMIT 40""".stripMargin,
+         |LIMIT 40""".stripMargin)),
 
-    "d_mixture_plan" ->
+    Op("d_mixture_plan", mixturePlan, Some(
       s"""WITH d AS (
          |  SELECT doc_id, source,
          |    CAST(len($ToksSql) AS BIGINT) AS n_tok
@@ -1260,9 +1232,9 @@ object TextOps extends graft.Registry {
          |SELECT p.source, p.src_tokens, p.rate_ppm,
          |  COALESCE(k.n_kept, 0) AS n_kept,
          |  COALESCE(k.kept_tokens, 0) AS kept_tokens
-         |FROM p LEFT JOIN k USING (source)""".stripMargin,
+         |FROM p LEFT JOIN k USING (source)""".stripMargin)),
 
-    "d_cms_eval" ->
+    Op("d_cms_eval", cmsEval, Some(
       s"""WITH t AS (SELECT unnest($ToksSql) AS term FROM documents),
          |c AS (SELECT term, COUNT(*) AS n FROM t
          |      WHERE length(term) > 0 GROUP BY 1),
@@ -1282,28 +1254,28 @@ object TextOps extends graft.Registry {
          |SELECT pr.term, MAX(pr.n) AS n_exact, MIN(sk.counter) AS n_est,
          |       MIN(sk.counter) - MAX(pr.n) AS overcount
          |FROM pr JOIN sk USING (row_i, bucket)
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin)),
 
     // exact truth: the candidate pass is a strict superset by the
     // freqItems guarantee, so exact-verify == plain exact aggregation
-    "d_heavy_hitters" ->
+    Op("d_heavy_hitters", heavyHitters, Some(
       s"""WITH t AS (SELECT unnest($ToksSql) AS term FROM documents),
          |t2 AS (SELECT term FROM t WHERE length(term) > 0),
          |n AS (SELECT COUNT(*) AS n FROM t2),
          |c AS (SELECT term, COUNT(*) AS cnt FROM t2 GROUP BY 1)
          |SELECT term, cnt, CAST(cnt * 10000 // (SELECT n FROM n) AS BIGINT)
          |         AS share_bp
-         |FROM c WHERE cnt * 1000 > (SELECT n FROM n)""".stripMargin,
+         |FROM c WHERE cnt * 1000 > (SELECT n FROM n)""".stripMargin)),
 
-    "d_source_cap" ->
+    Op("d_source_cap", sourceCap, Some(
       """WITH r AS (SELECT doc_id, source,
         |  row_number() OVER (PARTITION BY source
         |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
         |  FROM documents)
         |SELECT doc_id, source, CAST(rk AS BIGINT) AS rk
-        |FROM r WHERE rk <= 100""".stripMargin,
+        |FROM r WHERE rk <= 100""".stripMargin)),
 
-    "d_repetition" ->
+    Op("d_repetition", repetition, Some(
       s"""WITH t AS (SELECT doc_id, $ToksSql AS w FROM documents),
          |g AS (SELECT doc_id,
          |  CASE WHEN len(w) >= 2 THEN list_transform(
@@ -1327,9 +1299,9 @@ object TextOps extends graft.Registry {
          |  FROM bc GROUP BY 1)
          |SELECT i.doc_id, i.n_trigrams, i.dup_trigram_frac,
          |  COALESCE(sh.top_bigram_share, 0.0) AS top_bigram_share
-         |FROM inrow i LEFT JOIN sh ON sh.doc_id = i.doc_id""".stripMargin,
+         |FROM inrow i LEFT JOIN sh ON sh.doc_id = i.doc_id""".stripMargin)),
 
-    "d_pack_sequences" ->
+    Op("d_pack_sequences", packSeq, Some(
       s"""WITH t AS (SELECT doc_id, source,
          |  CAST(len(list_filter($ToksSql, x -> length(x) > 0)) AS BIGINT)
          |    AS n_tok FROM documents),
@@ -1341,9 +1313,9 @@ object TextOps extends graft.Registry {
          |  COUNT(*) AS n_docs,
          |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
          |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM c GROUP BY 1, 2""".stripMargin,
+         |FROM c GROUP BY 1, 2""".stripMargin)),
 
-    "d_entropy" ->
+    Op("d_entropy", entropy, Some(
       s"""WITH t AS (SELECT doc_id, unnest($ToksSql) AS term FROM documents),
          |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t
          |       WHERE length(term) > 0 GROUP BY 1, 2),
@@ -1357,9 +1329,9 @@ object TextOps extends graft.Registry {
          |SELECT doc_id, n,
          |       CAST(round(ln(CAST(n AS DOUBLE)) * 1e6) AS BIGINT)
          |         - slog_u // n AS entropy_unat
-         |FROM agg""".stripMargin,
+         |FROM agg""".stripMargin)),
 
-    "d_chunk" ->
+    Op("d_chunk", chunk, Some(
       s"""WITH t AS (SELECT doc_id,
          |  list_filter($ToksSql, x -> length(x) > 0) AS w FROM documents),
          |s AS (SELECT doc_id, w,
@@ -1371,9 +1343,9 @@ object TextOps extends graft.Registry {
          |    AS BIGINT) AS n_toks,
          |  array_to_string(list_slice(w, start, least(start + 31, len(w))),
          |    ' ') AS chunk_text
-         |FROM s""".stripMargin,
+         |FROM s""".stripMargin)),
 
-    "d_vocab_topk" -> {
+    Op("d_vocab_topk", vocab, Some {
       val stops = Stopwords.map(s => s"'$s'").mkString(", ")
       s"""WITH t AS (SELECT unnest($ToksSql) AS term FROM documents),
          |c AS (SELECT term, COUNT(*) AS n FROM t
@@ -1382,9 +1354,9 @@ object TextOps extends graft.Registry {
          |top AS (SELECT term, n FROM c ORDER BY n DESC, term LIMIT 20)
          |SELECT term, n, row_number() OVER (ORDER BY n DESC, term) AS rk
          |FROM top""".stripMargin
-    },
+    }),
 
-    "d_tfidf_topterms" ->
+    Op("d_tfidf_topterms", tfidf, Some(
       s"""WITH t AS (SELECT doc_id, $ToksSql AS w FROM documents),
          |tok AS (SELECT doc_id, unnest(w) AS term FROM t),
          |tok2 AS (SELECT doc_id, term FROM tok WHERE length(term) > 0),
@@ -1398,9 +1370,9 @@ object TextOps extends graft.Registry {
          |SELECT doc_id, term, tf, df,
          |       CAST(round(tf * ln(n_docs / df) * 1e6) AS BIGINT)
          |         AS tfidf_micro, rk
-         |FROM r WHERE rk <= 3""".stripMargin,
+         |FROM r WHERE rk <= 3""".stripMargin)),
 
-    "d_dataset_card" ->
+    Op("d_dataset_card", datasetCard, Some(
       s"""WITH d AS (SELECT lang, source, text,
          |             CAST(len($ToksSql) AS BIGINT) AS nt,
          |             CAST(length(text) AS BIGINT) AS nc
@@ -1422,9 +1394,9 @@ object TextOps extends graft.Registry {
          |SELECT b.*, dup.n_exact_dup_docs,
          |       CAST((n_tokens * 1000) // n_docs AS BIGINT)
          |         AS mean_doc_tokens_milli
-         |FROM b, dup""".stripMargin,
+         |FROM b, dup""".stripMargin)),
 
-    "d_text_stats" ->
+    Op("d_text_stats", stats, Some(
       s"""WITH t AS (SELECT doc_id, lang, n_chars, text, $ToksSql AS w FROM documents)
          |SELECT doc_id, lang, n_chars,
          |  CAST(length(text) AS INT) AS n_chars_calc,
@@ -1438,9 +1410,9 @@ object TextOps extends graft.Registry {
          |   CASE WHEN CAST(len(list_filter(w, x -> x IN (${Stopwords.map("'" + _ + "'").mkString(",")}))) AS DOUBLE) / len(w) <= 0.5 THEN 0.25 ELSE 0.0 END +
          |   CASE WHEN CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) BETWEEN 3.0 AND 12.0 THEN 0.25 ELSE 0.0 END
          |  AS DOUBLE) AS quality_score
-         |FROM t""".stripMargin,
+         |FROM t""".stripMargin)),
 
-    "d_lang_id" ->
+    Op("d_lang_id", langId, Some(
       s"""WITH t AS (SELECT doc_id, lang, text, $ToksSql AS w,
          |  len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) AS cjk FROM documents)
          |SELECT doc_id, lang, CAST(cjk AS INT) AS cjk_chars,
@@ -1456,30 +1428,30 @@ object TextOps extends graft.Registry {
          |       WHEN list_contains(w, 'le') OR list_contains(w, 'les') OR list_contains(w, 'une') THEN 'fr'
          |       WHEN list_contains(w, 'el') OR list_contains(w, 'los') OR list_contains(w, 'una') THEN 'es'
          |       ELSE 'unknown' END) AS INT) AS agree
-         |FROM t""".stripMargin,
+         |FROM t""".stripMargin)),
 
-    "d_fingerprint" ->
+    Op("d_fingerprint", fingerprint, Some(
       s"""WITH t AS (SELECT doc_id, text, $ToksSql AS w FROM documents)
          |SELECT doc_id,
          |  md5(text) AS fp_exact,
          |  md5(array_to_string(w, ' ')) AS fp_norm,
          |  list_reduce(list_prepend(0::BIGINT, list_transform(w, t2 -> ${hash48Sql("t2")})),
          |              (h, x) -> (h * 31 + x) % $M48) AS fp_rolling
-         |FROM t""".stripMargin,
+         |FROM t""".stripMargin)),
 
-    "d_simhash" ->
+    Op("d_simhash", simhashQ, Some(
       s"""WITH t AS (SELECT doc_id, $ToksSql AS w FROM documents),
          |h AS (SELECT doc_id, list_transform(w, t2 -> ${hash48Sql("t2")}) AS hs FROM t)
-         |SELECT doc_id, $simhashSql AS simhash FROM h""".stripMargin,
+         |SELECT doc_id, $simhashSql AS simhash FROM h""".stripMargin)),
 
-    "d_minhash_sig" ->
+    Op("d_minhash_sig", minhashSigQ, Some(
       s"""WITH t AS (SELECT doc_id, $ToksSql AS w FROM documents),
          |s AS (SELECT doc_id, $ShinglesSql AS sh FROM t)
          |SELECT doc_id,
          |    $minhashSigSqlCols
-         |FROM s""".stripMargin,
+         |FROM s""".stripMargin)),
 
-    "d_quality_filter" ->
+    Op("d_quality_filter", qualityFilter, Some(
       s"""WITH t AS (SELECT doc_id, $ToksSql AS w FROM documents),
          |m AS (SELECT doc_id,
          |  len(w) AS n_tokens,
@@ -1494,13 +1466,13 @@ object TextOps extends graft.Registry {
          |       WHEN avg_token_len NOT BETWEEN 3.0 AND 12.0 THEN 'token_shape'
          |       ELSE 'ok' END AS reason
          |FROM m)
-         |SELECT doc_id, CAST(reason = 'ok' AS INT) AS keep, reason FROM r""".stripMargin,
+         |SELECT doc_id, CAST(reason = 'ok' AS INT) AS keep, reason FROM r""".stripMargin)),
 
-    "d_token_counts" ->
+    Op("d_token_counts", tokenCounts, Some(
       s"""SELECT doc_id,
          |  CAST(len($ToksSql) AS INT) AS n_ws_tokens,
          |  CAST(len(regexp_extract_all(lower(text), '$BpePattern')) AS INT) AS n_bpe_tokens,
          |  CAST(length(text) AS DOUBLE) /
          |    len(regexp_extract_all(lower(text), '$BpePattern')) AS chars_per_token
-         |FROM documents""".stripMargin)
+         |FROM documents""".stripMargin)))
 }

@@ -8,6 +8,7 @@ import org.apache.spark.ml.feature.{OneHotEncoder, StandardScaler, StringIndexer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Op
 import graft.eval.Metrics
 import graft.queries.Churn
 
@@ -442,53 +443,46 @@ object ChurnML extends graft.Registry {
     Seq(("train", a.count()), ("test", b.count())).toDF("split", "rows")
   }
 
-  val queries: Map[String, Q] = Map(
-    "m1_string_indexer" -> m1,
-    "m1_keep"           -> m1Keep,
-    "m2_onehot"         -> m2,
-    "m3_assembler"      -> m3,
-    "o3_random_split"   -> o3,
-    // Budget-scaled iteration counts (r8, VERDICT r7 Next #5): the ML
-    // fits were 98 s of the 169 s bench while the reference's FULL
-    // configs (gbt 200 rounds, lr 100, fm 50) stay exercised at sf0.001
-    // in MLChurnSpec — so the bench entries document and pay a scaled
-    // round count instead of double-billing convergence cost every
-    // round. Each config column names both numbers.
-    "ml_rf_churn"       -> ((s, d) => trainEval(s, d, "rf")),
-    "ml_gbt_churn"      -> ((s, d) => trainEval(s, d, "gbt", gbtIter = 25)),
-    // the front-end is the point here (boosting already benched by
-    // ml_gbt_churn) — 20 rounds keeps the bench honest without
-    // double-paying the iteration cost; config column says so.
-    "ml_gbt_xgbpath"    -> ((s, d) => trainEval(s, d, "gbt_xgb", gbtIter = 20)),
-    "ml_lr_churn"       -> ((s, d) => trainEval(s, d, "lr", lrIter = 30)),
-    "ml_fm_churn"       -> ((s, d) => trainEval(s, d, "fm", fmIter = 10)),
-    // hash-fold CV: deterministic folds, one wide-table build for k fits
-    "ml_cv_lr"          -> ((s, d) => crossValidate(s, d, k = 3, lrIter = 12)))
-
-  val oracles: Map[String, String] = Map(
-    "m1_string_indexer" ->
+  val ops: Seq[Op] = Seq(
+    Op("m1_string_indexer", m1, Some(
       """SELECT o_orderpriority AS value,
         |       row_number() OVER (ORDER BY count(*) DESC, o_orderpriority) - 1 AS idx
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "m1_keep" ->
+        |FROM orders GROUP BY o_orderpriority""".stripMargin)),
+    Op("m1_keep", m1Keep, Some(
       """WITH d AS (
         |  SELECT o_orderpriority AS value,
         |         row_number() OVER (ORDER BY count(*) DESC, o_orderpriority) - 1 AS idx
         |  FROM orders WHERE o_orderpriority <> '5-LOW' GROUP BY o_orderpriority)
         |SELECT value, idx FROM d
         |UNION ALL
-        |SELECT '5-LOW' AS value, (SELECT count(*) FROM d) AS idx""".stripMargin,
-    "m2_onehot" ->
+        |SELECT '5-LOW' AS value, (SELECT count(*) FROM d) AS idx""".stripMargin)),
+    Op("m2_onehot", m2, Some(
       """WITH d AS (
         |  SELECT o_orderpriority AS value,
         |         row_number() OVER (ORDER BY count(*) DESC, o_orderpriority) - 1 AS idx
         |  FROM orders GROUP BY o_orderpriority)
         |SELECT value, idx, (SELECT count(*) FROM d) AS vec_size, idx AS hot_pos
-        |FROM d""".stripMargin,
-    "m3_assembler" ->
+        |FROM d""".stripMargin)),
+    Op("m3_assembler", m3, Some(
       """SELECT l_orderkey, l_linenumber,
         |       l_quantity AS v_quantity,
         |       l_extendedprice AS v_extendedprice,
         |       l_discount AS v_discount
-        |FROM lineitem""".stripMargin)
+        |FROM lineitem""".stripMargin)),
+    Op("o3_random_split", o3),
+    // Budget-scaled iteration counts: the reference's full configs
+    // (gbt 200 rounds, lr 100, fm 50) are exercised at sf0.001 in
+    // MLChurnSpec, so these entries run a scaled round count instead of
+    // paying convergence cost on every bench pass. Each config column
+    // names both numbers.
+    Op("ml_rf_churn", (s, d) => trainEval(s, d, "rf")),
+    Op("ml_gbt_churn", (s, d) => trainEval(s, d, "gbt", gbtIter = 25)),
+    // the front-end is the point here (boosting already benched by
+    // ml_gbt_churn) — 20 rounds keeps the bench honest without
+    // double-paying the iteration cost; config column says so.
+    Op("ml_gbt_xgbpath", (s, d) => trainEval(s, d, "gbt_xgb", gbtIter = 20)),
+    Op("ml_lr_churn", (s, d) => trainEval(s, d, "lr", lrIter = 30)),
+    Op("ml_fm_churn", (s, d) => trainEval(s, d, "fm", fmIter = 10)),
+    // hash-fold CV: deterministic folds, one wide-table build for k fits
+    Op("ml_cv_lr", (s, d) => crossValidate(s, d, k = 3, lrIter = 12)))
 }

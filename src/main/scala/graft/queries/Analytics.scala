@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.util.Cols._
 import graft.llm.TextOps.{hash48, hash48Sql}
 
@@ -1544,38 +1544,6 @@ object Analytics extends graft.Registry {
         max($"ihi" - $"ilo").as("longest_days"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "ev_mann_whitney"     -> mannWhitney,
-    "ev_seasonality_dow"  -> seasonalityDow,
-    "m24_psi"             -> psi,
-    "t12_interval_union"  -> intervalUnion,
-    "ev_trend_ols"        -> trendOls,
-    "t11_snapshot_diff"   -> snapshotDiff,
-    "j14_pit_join"        -> pitJoin,
-    "t7_scd2"             -> scd2,
-    "t8_merge_upsert"     -> mergeUpsert,
-    "t9_incremental_agg"  -> incrementalAgg,
-    "ev_cohort_retention" -> cohortRetention,
-    "ev_anomaly"          -> anomaly,
-    "ev_transitions"      -> transitions,
-    "a16_decile_lift"     -> decileLift,
-    "a19_drift_bins"      -> driftBins,
-    "a21_ks_drift"        -> ksDrift,
-    "ev_forecast_naive"   -> forecastNaive,
-    "ev_ewma"             -> ewma,
-    "ev_survival_table"   -> survivalTable,
-    "ev_changepoint"      -> changepoint,
-    "ev_attribution"      -> attribution,
-    "g6_hits"             -> hits,
-    "g1_pagerank"         -> pagerank,
-    "g7_random_walk"      -> randomWalk,
-    "g8_node2vec"         -> node2vec,
-    "g2_triangles"        -> triangles,
-    "g3_communities"      -> communities,
-    "g4_kcore"            -> kcore,
-    "g5_bfs"              -> bfs,
-    "ev_paths"            -> paths)
-
   /** The SCD2 versioned-dimension statement — the `t7_scd2` oracle
     * (no filter), also nested with the non-purchase filter as the dim
     * side of `j14_pit_join`. */
@@ -1603,10 +1571,10 @@ object Analytics extends graft.Registry {
       |         IS NULL AS is_current
       |FROM g""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // the same two normalized rounds as chained CTEs; // on positive
     // HUGEINTs is the floorDiv twin
-    "g6_hits" ->
+    Op("g6_hits", hits, Some(
       """WITH e AS (
         |  SELECT DISTINCT o_custkey AS c, l_partkey AS p
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
@@ -1626,10 +1594,10 @@ object Analytics extends graft.Registry {
         |SELECT p AS p_partkey, CAST(raw AS BIGINT) AS auth_raw,
         |       CAST((raw * 1000000000) // mx AS BIGINT) AS auth_ppb
         |FROM a2r, a2m
-        |ORDER BY auth_ppb DESC, p_partkey ASC LIMIT 20""".stripMargin,
+        |ORDER BY auth_ppb DESC, p_partkey ASC LIMIT 20""".stripMargin)),
 
     // isodow − 1 anchors Monday = 0 like Spark's weekday()
-    "ev_seasonality_dow" ->
+    Op("ev_seasonality_dow", seasonalityDow, Some(
       """WITH d AS (
         |  SELECT CAST(isodow(CAST(o_orderdate AS DATE)) - 1 AS BIGINT)
         |           AS dow,
@@ -1644,10 +1612,10 @@ object Analytics extends graft.Registry {
         |         AS row_share_ppm,
         |       CAST((CAST(sum_cents AS HUGEINT) * 1000000) // t_c AS BIGINT)
         |         AS rev_share_ppm
-        |FROM g, t""".stripMargin,
+        |FROM g, t""".stripMargin)),
 
     // naive global-window spelling of the same doubled-midrank algebra
-    "ev_mann_whitney" ->
+    Op("ev_mann_whitney", mannWhitney, Some(
       """WITH o AS (
         |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
         |           AS cents,
@@ -1672,11 +1640,11 @@ object Analytics extends graft.Registry {
         |         AS u2_ref,
         |       CAST(SUM(CAST(t AS HUGEINT) * t * t - t) AS BIGINT)
         |         AS tie_cubes
-        |FROM r""".stripMargin,
+        |FROM r""".stripMargin)),
 
     // the m13 iv pattern: exact int64 products into the double log (all
     // < 2^53 at this sf), HUGEINT half-up floor for the contribution
-    "m24_psi" ->
+    Op("m24_psi", psi, Some(
       """WITH binned AS (
         |  SELECT CAST(floor(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
         |           AS BIGINT) / 2500000) AS BIGINT) AS bin,
@@ -1703,12 +1671,12 @@ object Analytics extends graft.Registry {
         |SELECT bin, n_ref, n_cur, lr_micro,
         |       CAST((psi_num - (((psi_num % psi_den) + psi_den) % psi_den))
         |         // psi_den AS BIGINT) AS psi_micro
-        |FROM x""".stripMargin,
+        |FROM x""".stripMargin)),
 
     // identical gaps-and-islands spelling: running-max window → island
     // flag → cumulative island id → two aggregates; ties pre-aggregated
     // so both window orders are total
-    "t12_interval_union" ->
+    Op("t12_interval_union", intervalUnion, Some(
       """WITH iv AS (
         |  SELECT l_suppkey,
         |         CAST(datediff('day', DATE '1970-01-01',
@@ -1737,12 +1705,12 @@ object Analytics extends graft.Registry {
         |       CAST(SUM(ihi - ilo) AS BIGINT) AS covered_days,
         |       CAST(SUM(ne) AS BIGINT) AS n_items,
         |       CAST(MAX(ihi - ilo) AS BIGINT) AS longest_days
-        |FROM g GROUP BY 1""".stripMargin,
+        |FROM g GROUP BY 1""".stripMargin)),
 
     // HUGEINT carries the cross-products; the positive-mod subtraction
     // makes // exact (floor == truncate on an exact quotient) so a
     // declining series cannot split the engines on rounding direction
-    "ev_trend_ols" ->
+    Op("ev_trend_ols", trendOls, Some(
       """WITH daily AS (
         |  SELECT CAST(o_orderdate AS DATE) AS d,
         |         CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -1766,9 +1734,9 @@ object Analytics extends graft.Registry {
         |         AS BIGINT) AS slope_cpd_ppm,
         |       CAST((num_a - (((num_a % den) + den) % den)) // den
         |         AS BIGINT) AS icept_cents
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin)),
 
-    "t11_snapshot_diff" -> {
+    Op("t11_snapshot_diff", snapshotDiff, Some {
       def h(tag: String) = hash48Sql(s"'$tag' || CAST(k AS VARCHAR)")
       s"""WITH s1 AS (
          |  SELECT o_orderkey AS k, o_orderstatus AS st,
@@ -1792,9 +1760,9 @@ object Analytics extends graft.Registry {
          |SELECT change, COUNT(*) AS n,
          |       CAST(SUM(drift) AS BIGINT) AS abs_drift_cents
          |FROM j GROUP BY 1""".stripMargin
-    },
+    }),
 
-    "ev_transitions" ->
+    Op("ev_transitions", transitions, Some(
       """WITH p AS (
         |  SELECT COALESCE(LAG(event_type) OVER (PARTITION BY user_id
         |           ORDER BY ts, event_id), '_start') AS prev_type,
@@ -1804,11 +1772,11 @@ object Analytics extends graft.Registry {
         |t AS (SELECT prev_type, CAST(SUM(n) AS BIGINT) AS n_prev FROM c GROUP BY 1)
         |SELECT c.prev_type, c.next_type, c.n, t.n_prev,
         |       floor((c.n * 100 * 2 + t.n_prev) / (t.n_prev * 2)) / 100.0 AS p_pct
-        |FROM c JOIN t USING (prev_type)""".stripMargin,
+        |FROM c JOIN t USING (prev_type)""".stripMargin)),
 
     // deliberate one-pass recompute: state-merge == recompute is the
     // correctness contract of incremental aggregate maintenance
-    "t9_incremental_agg" ->
+    Op("t9_incremental_agg", incrementalAgg, Some(
       """WITH o AS (
         |  SELECT o_orderstatus, o_orderpriority,
         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -1818,9 +1786,9 @@ object Analytics extends graft.Registry {
         |       MIN(cents) / 100.0 AS min_price,
         |       MAX(cents) / 100.0 AS max_price,
         |       floor((SUM(cents) * 2 + COUNT(*)) / (COUNT(*) * 2)) / 100.0 AS avg_price
-        |FROM o GROUP BY 1, 2""".stripMargin,
+        |FROM o GROUP BY 1, 2""".stripMargin)),
 
-    "a19_drift_bins" ->
+    Op("a19_drift_bins", driftBins, Some(
       """WITH b AS (
         |  SELECT CAST(floor(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
         |           / 2500000) AS BIGINT) AS bin,
@@ -1839,9 +1807,9 @@ object Analytics extends graft.Registry {
         |         - CAST(floor((n_ref * 10000 * 2 + t_ref) / (t_ref * 2)) AS BIGINT)) AS delta_bp,
         |       abs(CAST(floor((n_cur * 10000 * 2 + t_cur) / (t_cur * 2)) AS BIGINT)
         |         - CAST(floor((n_ref * 10000 * 2 + t_ref) / (t_ref * 2)) AS BIGINT)) > 100 AS drifted
-        |FROM g, t""".stripMargin,
+        |FROM g, t""".stripMargin)),
 
-    "ev_changepoint" ->
+    Op("ev_changepoint", changepoint, Some(
       """WITH d AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
@@ -1861,9 +1829,9 @@ object Analytics extends graft.Registry {
         |SELECT MIN(day) AS cp_day, MAX(n) AS n_days,
         |       floor((MAX(cm) * 2 + MAX(n)) / (MAX(n) * 2)) / 100.0 AS cusum_dollars
         |FROM (SELECT day, n, c, MAX(c) OVER () AS cm FROM c)
-        |WHERE c = cm""".stripMargin,
+        |WHERE c = cm""".stripMargin)),
 
-    "ev_survival_table" ->
+    Op("ev_survival_table", survivalTable, Some(
       """WITH u AS (
         |  SELECT user_id, MIN(CAST(ts AS TIMESTAMP)) AS first_ts,
         |         MAX(CAST(ts AS TIMESTAMP)) AS last_ts
@@ -1882,9 +1850,9 @@ object Analytics extends graft.Registry {
         |       CAST(SUM(n_churn + n_censored) OVER (ORDER BY duration
         |         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk,
         |       n_churn, n_censored
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin)),
 
-    "ev_forecast_naive" ->
+    Op("ev_forecast_naive", forecastNaive, Some(
       """WITH d AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
@@ -1902,9 +1870,9 @@ object Analytics extends graft.Registry {
         |SELECT COUNT(*) AS n_days,
         |       floor((SUM(abs_err) * 2 + COUNT(*)) / (COUNT(*) * 2)) / 100.0 AS mae,
         |       CAST(floor((SUM(abs_err) * 10000 * 2 + SUM(rev)) / (SUM(rev) * 2)) AS BIGINT) AS wape_bp
-        |FROM e""".stripMargin,
+        |FROM e""".stripMargin)),
 
-    "ev_ewma" ->
+    Op("ev_ewma", ewma, Some(
       """WITH d AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
@@ -1930,12 +1898,12 @@ object Analytics extends graft.Registry {
         |SELECT day, CAST(m AS BIGINT) AS n_terms,
         |       CAST(numer // CAST(((1::BIGINT) << m) - 1 AS HUGEINT)
         |         AS BIGINT) AS ema_cents
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin)),
 
     // independent spelling: the naive GLOBAL window cumsum the Spark
     // side deliberately avoids — DuckDB is single-node, so its global
     // ORDER BY is exactly the oracle's job
-    "a21_ks_drift" ->
+    Op("a21_ks_drift", ksDrift, Some(
       """WITH v AS (
         |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
         |         o_orderdate >= TIMESTAMP '1998-01-01' AS is_cur
@@ -1958,11 +1926,11 @@ object Analytics extends graft.Registry {
         |SELECT CAST(floor(MAX(d) * 10000 / (MAX(t_ref) * MAX(t_cur))) AS BIGINT) AS ks_bp,
         |       MIN(CASE WHEN d = (SELECT MAX(d) FROM d) THEN cents END) / 100.0 AS at_price,
         |       CAST(MAX(t_ref) AS BIGINT) AS t_ref, CAST(MAX(t_cur) AS BIGINT) AS t_cur
-        |FROM d""".stripMargin,
+        |FROM d""".stripMargin)),
 
     // independent spelling: ROW_NUMBER picks the mode+tie-break that the
     // Spark side gets from max_by(lbl, (cnt, -lbl))
-    "g3_communities" ->
+    Op("g3_communities", communities, Some(
       """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |und AS (
         |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -1982,9 +1950,9 @@ object Analytics extends graft.Registry {
         |          SELECT u, lbl, ROW_NUMBER() OVER (PARTITION BY u
         |            ORDER BY cnt DESC, lbl ASC) AS rn FROM c2)
         |        WHERE rn = 1)
-        |SELECT n AS p_partkey, lbl AS community FROM it2""".stripMargin,
+        |SELECT n AS p_partkey, lbl AS community FROM it2""".stripMargin)),
 
-    "g4_kcore" ->
+    Op("g4_kcore", kcore, Some(
       """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |und AS (
         |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -2003,9 +1971,9 @@ object Analytics extends graft.Registry {
         |k4 AS (SELECT u FROM b3 GROUP BY u HAVING COUNT(*) >= 3),
         |b4 AS (SELECT b.u, b.v FROM b3 b
         |       JOIN k4 x ON b.u = x.u JOIN k4 y ON b.v = y.u)
-        |SELECT u AS p_partkey, COUNT(*) AS degree FROM b4 GROUP BY 1""".stripMargin,
+        |SELECT u AS p_partkey, COUNT(*) AS degree FROM b4 GROUP BY 1""".stripMargin)),
 
-    "g5_bfs" ->
+    Op("g5_bfs", bfs, Some(
       """WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |und AS MATERIALIZED (
         |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -2029,9 +1997,9 @@ object Analytics extends graft.Registry {
         |         SELECT n, d FROM d3
         |         UNION ALL SELECT e.v, d3.d + 1 FROM e JOIN d3 ON e.u = d3.n
         |       ) GROUP BY n)
-        |SELECT n AS p_partkey, CAST(d AS BIGINT) AS dist FROM d4""".stripMargin,
+        |SELECT n AS p_partkey, CAST(d AS BIGINT) AS dist FROM d4""".stripMargin)),
 
-    "ev_paths" ->
+    Op("ev_paths", paths, Some(
       """WITH o AS (
         |  SELECT event_type,
         |         LAG(event_type) OVER (PARTITION BY user_id
@@ -2045,10 +2013,10 @@ object Analytics extends graft.Registry {
         |WHERE prev_type IS NOT NULL AND t <= prev_t + INTERVAL '30 minutes'
         |GROUP BY 1, 2
         |ORDER BY n DESC, prev_type, next_type
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
     // same merge semantics, independently spelled as FULL OUTER JOIN
-    "t8_merge_upsert" ->
+    Op("t8_merge_upsert", mergeUpsert, Some(
       s"""WITH o AS (
          |  SELECT o_orderkey, o_custkey, o_orderstatus,
          |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -2073,13 +2041,13 @@ object Analytics extends graft.Registry {
          |  FROM o b FULL OUTER JOIN ch c ON b.o_orderkey = c.o_orderkey)
          |SELECT o_orderkey, o_custkey, o_orderstatus, cents / 100.0 AS o_totalprice,
          |       action
-         |FROM m WHERE action <> 'D'""".stripMargin,
+         |FROM m WHERE action <> 'D'""".stripMargin)),
 
-    "t7_scd2" -> scd2OracleSql(),
+    Op("t7_scd2", scd2, Some(scd2OracleSql())),
 
     // the SCD2 statement nested (non-purchase filter) as the dim side;
     // half-open interval predicate, open-ended current version
-    "j14_pit_join" ->
+    Op("j14_pit_join", pitJoin, Some(
       s"""WITH v AS (SELECT * FROM (${scd2OracleSql("WHERE event_type <> 'purchase'")}) sv),
          |p AS (SELECT event_id AS p_id, user_id,
          |             CAST(ts AS TIMESTAMP) AS p_ts
@@ -2087,9 +2055,9 @@ object Analytics extends graft.Registry {
          |SELECT p.p_id, p.user_id, p.p_ts, v.version, v.channel
          |FROM p JOIN v ON v.user_id = p.user_id
          | AND p.p_ts >= v.valid_from
-         | AND (v.valid_to IS NULL OR p.p_ts < v.valid_to)""".stripMargin,
+         | AND (v.valid_to IS NULL OR p.p_ts < v.valid_to)""".stripMargin)),
 
-    "ev_cohort_retention" ->
+    Op("ev_cohort_retention", cohortRetention, Some(
       """WITH ev AS (
         |  SELECT user_id, CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS week
         |  FROM events),
@@ -2103,9 +2071,9 @@ object Analytics extends graft.Registry {
         |  GROUP BY 1, 2)
         |SELECT r.cohort_week, week_offset, n_active, n_cohort,
         |       floor((n_active * 100 * 2 + n_cohort) / (n_cohort * 2)) / 100.0 AS retention
-        |FROM r JOIN sizes USING (cohort_week)""".stripMargin,
+        |FROM r JOIN sizes USING (cohort_week)""".stripMargin)),
 
-    "a16_decile_lift" ->
+    Op("a16_decile_lift", decileLift, Some(
       """WITH u AS (
         |  SELECT user_id,
         |         SUM(CASE WHEN CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-24' THEN 1 ELSE 0 END) AS score,
@@ -2128,9 +2096,9 @@ object Analytics extends graft.Registry {
         |SELECT decile, n_users, n_pos,
         |       floor((n_pos * 100 * 2 + n_users) / (n_users * 2)) / 100.0 AS rate,
         |       floor((cum_pos * n_tot * 100 * 2 + cum_n * pos_tot) / (cum_n * pos_tot * 2)) / 100.0 AS cum_lift
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin)),
 
-    "ev_attribution" ->
+    Op("ev_attribution", attribution, Some(
       """WITH ev AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t, event_type, value,
         |         LAST_VALUE(CASE WHEN event_type IN ('click', 'view')
@@ -2144,9 +2112,9 @@ object Analytics extends graft.Registry {
         |       COUNT(*) AS n_conversions,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM ev WHERE event_type = 'purchase'
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin)),
 
-    "ev_anomaly" ->
+    Op("ev_anomaly", anomaly, Some(
       """WITH e AS (
         |  SELECT user_id, event_id,
         |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -2162,9 +2130,9 @@ object Analytics extends graft.Registry {
         |       MAX(md.mad4) AS mad4,
         |       CAST(SUM(CASE WHEN 2 * d.dev2 > 3 * md.mad4 THEN 1 ELSE 0 END) AS BIGINT) AS n_out
         |FROM d JOIN md USING (user_id)
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin)),
 
-    "g2_triangles" ->
+    Op("g2_triangles", triangles, Some(
       """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |und AS (
         |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -2186,14 +2154,13 @@ object Analytics extends graft.Registry {
         |SELECT node AS p_partkey, COUNT(*) AS n_triangles
         |FROM (SELECT x AS node FROM tri UNION ALL SELECT y FROM tri
         |      UNION ALL SELECT z FROM tri)
-        |GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 25""".stripMargin,
+        |GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 25""".stripMargin)),
 
-    "g1_pagerank" ->
-      // edges/deg/it* staged MATERIALIZED (the j9/r11 lesson, hit at
-      // sf1 by the ROUND CHAIN): inlined, every itK reference re-ran
-      // the items self-join behind estimate-blind pipelines and the
-      // sweep died spilling >80 GB of DuckDB temp; staged, each round
-      // reads the 18M-edge table once.
+    Op("g1_pagerank", pagerank, Some(
+      // edges/deg/it* staged MATERIALIZED: inlined, every itK
+      // reference re-runs the items self-join behind estimate-blind
+      // pipelines, which at sf1 spilled >80 GB of DuckDB temp; staged,
+      // each round reads the 18M-edge table once.
       """WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |edges AS MATERIALIZED (
         |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
@@ -2224,13 +2191,13 @@ object Analytics extends graft.Registry {
         |                        JOIN it2 i ON e.src = i.node) p
         |    ON p.dst = d.node GROUP BY 1, 2)
         |SELECT node AS p_partkey, CAST(r AS BIGINT) AS rank_ppb FROM it3
-        |ORDER BY r DESC, node ASC LIMIT 25""".stripMargin,
+        |ORDER BY r DESC, node ASC LIMIT 25""".stripMargin)),
 
     // g7: each step CTE picks, per walk, the out-neighbor minimizing the
     // md5-derived hash48 (identical spelling to the engine's
     // graft_hash48: first 12 hex chars as a 48-bit integer). Every
-    // frontier CTE staged MATERIALIZED (the g1/r11 round-chain lesson).
-    "g7_random_walk" -> {
+    // frontier CTE staged MATERIALIZED, as in g1_pagerank's round chain.
+    Op("g7_random_walk", randomWalk, Some {
       def h48(expr: String): String =
         s"CAST(('0x' || substr(md5($expr), 1, 12)) AS BIGINT)"
       def step(t: Int, prev: String): String =
@@ -2258,7 +2225,7 @@ object Analytics extends graft.Registry {
          |UNION ALL SELECT walk_id, CAST(1 AS BIGINT), node FROM s1
          |UNION ALL SELECT walk_id, CAST(2 AS BIGINT), node FROM s2
          |UNION ALL SELECT walk_id, CAST(3 AS BIGINT), node FROM s3""".stripMargin
-    },
+    }),
 
     // Mirrors node2vec stage for stage: same edge derivation, start
     // designation, weight CASE (1 uniform first hop / 4 return / 1
@@ -2266,7 +2233,7 @@ object Analytics extends graft.Registry {
     // the (hash, dst) argmin. Every stage is MATERIALIZED (the j9/ADC
     // staging rule — never hand DuckDB's estimate-blind join-order
     // search a CTE pipeline).
-    "g8_node2vec" -> {
+    Op("g8_node2vec", node2vec, Some {
       def h48(expr: String): String =
         s"CAST(('0x' || substr(md5($expr), 1, 12)) AS BIGINT)"
       def step(t: Int, prev: String): String =
@@ -2309,5 +2276,5 @@ object Analytics extends graft.Registry {
          |UNION ALL SELECT walk_id, CAST(1 AS BIGINT), node FROM s1
          |UNION ALL SELECT walk_id, CAST(2 AS BIGINT), node FROM s2
          |UNION ALL SELECT walk_id, CAST(3 AS BIGINT), node FROM s3""".stripMargin
-    })
+    }))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Op
 import graft.schemas.ChurnAdapter
 import graft.schemas.ChurnAdapter._
 import graft.util.Cols._
@@ -244,14 +245,6 @@ object Churn extends graft.Registry {
     wideTable(spark, dir).groupBy($"label").count().sort($"label")
   }
 
-  val queries: Map[String, Q] = Map(
-    "churn_features"   -> ((s, d) => features(s, d)),
-    "churn_wide_table" -> ((s, d) => wideTable(s, d)),
-    "u5_repurchase"    -> u5,
-    "u5_repurchase_windows" -> u5Windows,
-    "u4_group_flags"   -> u4,
-    "e4_class_balance" -> e4)
-
   // ------------------------------------------------------------------
   // DuckDB oracles — generated from the same metadata as the Spark side.
   // ------------------------------------------------------------------
@@ -360,28 +353,28 @@ object Churn extends graft.Registry {
          |FROM feat LEFT JOIN buyers USING (USR_NUM_ID)
          |GROUP BY 1""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "churn_features" -> featuresOracle,
-    "churn_wide_table" -> wideOracle,
-    "e4_class_balance" -> e4Oracle,
-    "u5_repurchase" ->
+  val ops: Seq[Op] = Seq(
+    Op("churn_features", (s, d) => features(s, d), Some(featuresOracle)),
+    Op("churn_wide_table", (s, d) => wideTable(s, d), Some(wideOracle)),
+    Op("e4_class_balance", e4, Some(e4Oracle)),
+    Op("u5_repurchase", u5, Some(
       s"""${ChurnAdapter.duckdbWith}
          |SELECT USR_NUM_ID, 2 AS last_2_repurchase FROM sales
          |WHERE ORDER_DATE >= DATE '$FeatureEnd' - 90 AND ORDER_DATE <= DATE '$FeatureEnd'
-         |GROUP BY USR_NUM_ID HAVING COUNT(DISTINCT TML_NUM_ID) > 1""".stripMargin,
+         |GROUP BY USR_NUM_ID HAVING COUNT(DISTINCT TML_NUM_ID) > 1""".stripMargin)),
 
-    "u5_repurchase_windows" -> {
+    Op("u5_repurchase_windows", u5Windows, Some {
       val one = (d: Int) =>
         s"""SELECT USR_NUM_ID, $d AS window_days, 2 AS repurchase FROM sales
            |WHERE ORDER_DATE >= DATE '$FeatureEnd' - $d AND ORDER_DATE <= DATE '$FeatureEnd'
            |GROUP BY USR_NUM_ID HAVING COUNT(DISTINCT TML_NUM_ID) > 1""".stripMargin
       s"""${ChurnAdapter.duckdbWith}
          |${Seq(30, 90, 180).map(one).mkString("\nUNION ALL\n")}""".stripMargin
-    },
-    "u4_group_flags" ->
+    }),
+    Op("u4_group_flags", u4, Some(
       s"""${ChurnAdapter.duckdbWith}
          |SELECT DISTINCT s.USR_NUM_ID, '肉禽客群' AS meat_group
          |FROM sales s LEFT JOIN goods g USING (ITEM_NUM_ID)
          |WHERE s.ORDER_DATE BETWEEN DATE '$FeatureStart' AND DATE '$FeatureEnd'
-         |  AND g.PTY_NUM_1 IN (2101, 2102)""".stripMargin)
+         |  AND g.PTY_NUM_1 IN (2101, 2102)""".stripMargin)))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.util.Cols._
 
 /** SURVEY.md §2.1/.3/.4/.5/.6/.7/.8/.9 relational operators, one named
@@ -1246,68 +1246,11 @@ object Relational extends graft.Registry {
         $"f.train_end_day", $"f.test_start_day", $"f.test_end_day")
   }
 
-  val queries: Map[String, Q] = Map(
-    "o9_walkforward_split" -> o9,
-    "o8_poisson_bootstrap" -> o8,
-    "a22_unpivot"        -> a22,
-    "s1_scan_dates"      -> s1,
-    "a17_dq_audit"       -> a17,
-    "p_column_ops"       -> pOps,
-    "j1_sql_left_join"   -> j1,
-    "j2_join_chain"      -> j2,
-    "j3_anti_label"      -> j3,
-    "a1_group_sum"       -> a1,
-    "a2_count_distinct"  -> a2,
-    "a2_approx_distinct" -> a2approx,
-    "a1_salted_agg"      -> a1salted,
-    "a3_group_count"     -> a3,
-    "a4_bround_mean"     -> a4,
-    "a5_distinct"        -> a5,
-    "a6_having"          -> a6,
-    "a8_percentiles"     -> a8,
-    "a9_pivot"           -> a9,
-    "a10_rollup"         -> a10,
-    "a11_stats_agg"      -> a11,
-    "o4_stratified_sample" -> o4,
-    "a12_profile"        -> a12,
-    "a13_cube"           -> a13,
-    "w16_lag_lead"       -> w16,
-    "ev_funnel"          -> evFunnel,
-    "a14_grouping_sets"  -> a14,
-    "t5_gapfill"         -> t5,
-    "w17_rolling_7d"     -> w17,
-    "a8_approx_percentiles" -> a8approx,
-    "o5_group_hash_split" -> o5,
-    "o6_weighted_sample" -> o6,
-    "o7_reservoir_sample" -> o7,
-    "w19_running_distinct" -> w19,
-    "j6_cooccurrence"    -> j6,
-    "j9_assoc_rules"     -> j9,
-    "j11_salted_join"    -> j11,
-    "j12_minmax_prune"   -> j12,
-    "j17_bloom_join"     -> j17,
-    "w18_rank_suite"     -> w18,
-    "a15_histogram"      -> a15,
-    "j7_fuzzy_block"     -> j7,
-    "j8_setsim_join"     -> j8,
-    "a20_hll_merge"      -> a20,
-    "w15_topk_group"     -> w15,
-    "f12_json_extract"   -> f12,
-    "f15_pii_redact"     -> f15,
-    "p2_set_ops"         -> p2,
-    "j5_semi_anti"       -> j5,
-    "w14_window_rfm"     -> w14,
-    "o1_orderby_rand"    -> o1,
-    "o1_rand_unseeded"   -> o1Unseeded,
-    "o2_sort"            -> o2,
-    "f_scalar_suite"     -> fScalar,
-    "t2_recency_window"  -> t2)
-
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // the naive fold-cross-join twin of the Spark side's single
     // conditional aggregate: identical integer day-offset boundaries
     // (seg = t_days // 5), last fold's test end = t_days
-    "o9_walkforward_split" ->
+    Op("o9_walkforward_split", o9, Some(
       """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS d FROM orders),
         |st AS (SELECT MIN(d) AS dmin,
         |              CAST(date_diff('day', MIN(d), MAX(d)) + 1 AS BIGINT)
@@ -1330,11 +1273,11 @@ object Relational extends graft.Registry {
         |  CAST(CASE WHEN f.fold = 4 THEN cfg.t_days
         |            ELSE cfg.seg * (f.fold + 1) END AS BIGINT) AS test_end_day
         |FROM dy, cfg, f
-        |GROUP BY f.fold, cfg.seg, cfg.t_days""".stripMargin,
+        |GROUP BY f.fold, cfg.seg, cfg.t_days""".stripMargin)),
 
     // same integer CDF thresholds; CASE tests ascending so the smallest
     // matching threshold wins, mirroring the Spark fold
-    "o8_poisson_bootstrap" -> {
+    Op("o8_poisson_bootstrap", o8, Some {
       val h = graft.llm.TextOps.hash48Sql(
         "'bs:' || CAST(r AS VARCHAR) || ':' || CAST(o_orderkey AS VARCHAR)")
       s"""WITH e AS (
@@ -1363,10 +1306,10 @@ object Relational extends graft.Registry {
          |       CAST((CAST(sum_cents AS HUGEINT) * 1000) // n_eff AS BIGINT)
          |         AS mean_cents_milli
          |FROM g""".stripMargin
-    },
+    }),
 
     // UNION ALL is the engine-independent unpivot spelling
-    "a22_unpivot" ->
+    Op("a22_unpivot", a22, Some(
       """WITH w AS (
         |  SELECT l_returnflag, COUNT(*) AS n_rows,
         |         CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
@@ -1375,12 +1318,12 @@ object Relational extends graft.Registry {
         |  FROM lineitem GROUP BY 1)
         |SELECT l_returnflag, 'n_rows' AS metric, n_rows AS value FROM w
         |UNION ALL SELECT l_returnflag, 'sum_qty', sum_qty FROM w
-        |UNION ALL SELECT l_returnflag, 'sum_cents', sum_cents FROM w""".stripMargin,
+        |UNION ALL SELECT l_returnflag, 'sum_cents', sum_cents FROM w""".stripMargin)),
 
     // the quadratic truth: full shared-token pair enumeration — the
     // prefix-filtered algorithm must reproduce it EXACTLY (no recall
     // knob to hide behind)
-    "j8_setsim_join" ->
+    Op("j8_setsim_join", j8, Some(
       """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |sz AS (SELECT l_orderkey, COUNT(*) AS n FROM items GROUP BY 1),
         |pair AS (
@@ -1396,9 +1339,10 @@ object Relational extends graft.Registry {
         |SELECT o1, o2, inter, union_sz,
         |       floor((inter * 100 * 2 + union_sz) / (union_sz * 2)) / 100.0
         |         AS jacc
-        |FROM j WHERE inter * 2 >= union_sz""".stripMargin,
+        |FROM j WHERE inter * 2 >= union_sz""".stripMargin)),
+    Op("a20_hll_merge", a20),
 
-    "a17_dq_audit" ->
+    Op("a17_dq_audit", a17, Some(
       """WITH a AS (
         |  SELECT COUNT(*) AS n,
         |         COUNT(DISTINCT l_orderkey * 8 + l_linenumber) AS n_key,
@@ -1416,15 +1360,15 @@ object Relational extends graft.Registry {
         |  UNION ALL SELECT 'qty_min', CAST(q_min AS DOUBLE), q_min >= 1.0 FROM a
         |  UNION ALL SELECT 'qty_max', CAST(q_max AS DOUBLE), q_max <= 50.0 FROM a
         |  UNION ALL SELECT 'flag_domain', CAST(n_bad_flag AS DOUBLE), n_bad_flag = 0 FROM a
-        |  UNION ALL SELECT 'ri_orders', CAST(n_orphan AS DOUBLE), n_orphan = 0 FROM o)""".stripMargin,
+        |  UNION ALL SELECT 'ri_orders', CAST(n_orphan AS DOUBLE), n_orphan = 0 FROM o)""".stripMargin)),
 
-    "s1_scan_dates" ->
+    Op("s1_scan_dates", s1, Some(
       """SELECT o_orderkey, o_custkey, CAST(o_orderdate AS DATE) AS order_date,
         |       o_orderpriority
         |FROM orders
-        |WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'""".stripMargin,
+        |WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'""".stripMargin)),
 
-    "p_column_ops" ->
+    Op("p_column_ops", pOps, Some(
       """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS INT) AS qty_int,
         |       '门店会员' AS channel,
         |       CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -1435,14 +1379,14 @@ object Relational extends graft.Registry {
         |FROM lineitem
         |WHERE l_returnflag <> 'R' AND l_quantity >= 1.0
         |  AND l_shipdate >= TIMESTAMP '1995-06-01 00:00:00'
-        |  AND l_linestatus IN ('O','F')""".stripMargin,
+        |  AND l_linestatus IN ('O','F')""".stripMargin)),
 
-    "j1_sql_left_join" ->
+    Op("j1_sql_left_join", j1, Some(
       """SELECT a.l_orderkey, a.l_partkey, b.p_brand, b.p_type, a.l_quantity
         |FROM lineitem a LEFT JOIN part b ON a.l_partkey = b.p_partkey
-        |WHERE a.l_quantity > 45""".stripMargin,
+        |WHERE a.l_quantity > 45""".stripMargin)),
 
-    "j2_join_chain" ->
+    Op("j2_join_chain", j2, Some(
       """WITH base AS (SELECT DISTINCT o_custkey AS custkey FROM orders),
         |f1 AS (SELECT o_custkey AS custkey,
         |              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
@@ -1454,16 +1398,16 @@ object Relational extends graft.Registry {
         |SELECT base.custkey, f1.total_spend, COALESCE(f2.n_finished, 0) AS n_finished,
         |       f3.n_priorities
         |FROM base LEFT JOIN f1 USING (custkey) LEFT JOIN f2 USING (custkey)
-        |          LEFT JOIN f3 USING (custkey)""".stripMargin,
+        |          LEFT JOIN f3 USING (custkey)""".stripMargin)),
 
-    "j3_anti_label" ->
+    Op("j3_anti_label", j3, Some(
       """SELECT c.c_custkey, COALESCE(b.label, 1) AS label
         |FROM customer c LEFT JOIN (
         |  SELECT DISTINCT o_custkey AS c_custkey, 0 AS label FROM orders
         |  WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1996-07-01' AND DATE '1996-09-30'
-        |) b USING (c_custkey)""".stripMargin,
+        |) b USING (c_custkey)""".stripMargin)),
 
-    "a1_group_sum" ->
+    Op("a1_group_sum", a1, Some(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -1472,46 +1416,47 @@ object Relational extends graft.Registry {
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
         |  COUNT(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin)),
 
-    "a2_count_distinct" ->
+    Op("a2_count_distinct", a2, Some(
       """SELECT o_custkey, COUNT(DISTINCT o_orderkey) AS frequence,
         |       COUNT(DISTINCT o_orderpriority) AS n_priorities
-        |FROM orders GROUP BY o_custkey""".stripMargin,
+        |FROM orders GROUP BY o_custkey""".stripMargin)),
+    Op("a2_approx_distinct", a2approx),
 
-    "a1_salted_agg" ->
+    Op("a1_salted_agg", a1salted, Some(
       """SELECT l_suppkey,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  COUNT(*) AS n_items
-        |FROM lineitem GROUP BY l_suppkey""".stripMargin,
+        |FROM lineitem GROUP BY l_suppkey""".stripMargin)),
 
-    "a3_group_count" ->
+    Op("a3_group_count", a3, Some(
       """SELECT l_suppkey, COUNT(*) AS promote_items_count
-        |FROM lineitem WHERE l_discount > 0.0 GROUP BY l_suppkey""".stripMargin,
+        |FROM lineitem WHERE l_discount > 0.0 GROUP BY l_suppkey""".stripMargin)),
 
-    "a4_bround_mean" ->
+    Op("a4_bround_mean", a4, Some(
       s"""SELECT o_custkey,
          |  ${broundRatio2Sql("CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)",
                               "COUNT(o_totalprice)")} AS avg_price
-         |FROM orders GROUP BY o_custkey""".stripMargin,
+         |FROM orders GROUP BY o_custkey""".stripMargin)),
 
-    "a5_distinct" ->
+    Op("a5_distinct", a5, Some(
       """SELECT DISTINCT o_custkey, o_orderpriority
-        |FROM orders WHERE o_orderstatus = 'O'""".stripMargin,
+        |FROM orders WHERE o_orderstatus = 'O'""".stripMargin)),
 
-    "a6_having" ->
+    Op("a6_having", a6, Some(
       """SELECT o_custkey, COUNT(DISTINCT o_orderkey) AS n_orders
-        |FROM orders GROUP BY o_custkey HAVING COUNT(DISTINCT o_orderkey) > 1""".stripMargin,
+        |FROM orders GROUP BY o_custkey HAVING COUNT(DISTINCT o_orderkey) > 1""".stripMargin)),
 
-    "w14_window_rfm" ->
+    Op("w14_window_rfm", w14, Some(
       """SELECT o_custkey,
         |  MAX(CAST(o_orderdate AS DATE)) AS last_order_date,
         |  MIN(CAST(o_orderdate AS DATE)) AS first_order_date,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS monetary,
         |  COUNT(o_orderkey) AS orders_count
-        |FROM orders GROUP BY o_custkey""".stripMargin,
+        |FROM orders GROUP BY o_custkey""".stripMargin)),
 
-    "a8_percentiles" ->
+    Op("a8_percentiles", a8, Some(
       """WITH q AS (
         |  SELECT l_returnflag,
         |         quantile_cont(CAST(l_extendedprice AS DOUBLE),
@@ -1520,9 +1465,9 @@ object Relational extends graft.Registry {
         |SELECT l_returnflag,
         |       round(qs[1], 4) AS p25, round(qs[2], 4) AS p50,
         |       round(qs[3], 4) AS p75, round(qs[4], 4) AS p95
-        |FROM q""".stripMargin,
+        |FROM q""".stripMargin)),
 
-    "a9_pivot" ->
+    Op("a9_pivot", a9, Some(
       """SELECT o_orderpriority,
         |  CAST(SUM(CASE WHEN o_orderstatus = 'F'
         |    THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS total_f,
@@ -1530,23 +1475,23 @@ object Relational extends graft.Registry {
         |    THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS total_o,
         |  CAST(SUM(CASE WHEN o_orderstatus = 'P'
         |    THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS total_p
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority""".stripMargin)),
 
-    "a10_rollup" ->
+    Op("a10_rollup", a10, Some(
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders
-        |GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin,
+        |GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin)),
 
     // Same md5-prefix hash as graft_hash48: both engines draw the
     // IDENTICAL sample — the reproducibility property the query exists
     // to demonstrate.
-    "o4_stratified_sample" ->
+    Op("o4_stratified_sample", o4, Some(
       """SELECT o_orderkey, o_orderstatus FROM orders
         |WHERE (CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 12)) AS BIGINT) % 100) <
-        |  CASE o_orderstatus WHEN 'O' THEN 50 WHEN 'F' THEN 20 ELSE 10 END""".stripMargin,
+        |  CASE o_orderstatus WHEN 'O' THEN 50 WHEN 'F' THEN 20 ELSE 10 END""".stripMargin)),
 
-    "a12_profile" ->
+    Op("a12_profile", a12, Some(
       """SELECT COUNT(*) AS n_rows,
         |  COUNT(o_custkey) AS nn_custkey,
         |  COUNT(DISTINCT o_custkey) AS ndv_custkey,
@@ -1555,15 +1500,15 @@ object Relational extends graft.Registry {
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  CAST(MIN(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS min_price,
         |  CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS max_price
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
 
-    "a13_cube" ->
+    Op("a13_cube", a13, Some(
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders
-        |GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin,
+        |GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin)),
 
-    "w16_lag_lead" ->
+    Op("w16_lag_lead", w16, Some(
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS od,
         |  lag(CAST(o_orderdate AS DATE), 1) OVER w AS prev_date,
         |  lead(CAST(o_orderdate AS DATE), 1) OVER w AS next_date,
@@ -1571,9 +1516,9 @@ object Relational extends graft.Registry {
         |  round(percent_rank() OVER w, 6) AS pct_rank
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY CAST(o_orderdate AS DATE), o_orderkey)""".stripMargin,
+        |             ORDER BY CAST(o_orderdate AS DATE), o_orderkey)""".stripMargin)),
 
-    "ev_funnel" ->
+    Op("ev_funnel", evFunnel, Some(
       """WITH t AS (
         |  SELECT event_type,
         |    lag(event_type, 1) OVER (PARTITION BY user_id
@@ -1581,17 +1526,17 @@ object Relational extends graft.Registry {
         |  FROM events)
         |SELECT prev_type, event_type, COUNT(*) AS n
         |FROM t WHERE prev_type IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin)),
 
-    "a14_grouping_sets" ->
+    Op("a14_grouping_sets", a14, Some(
       """SELECT o_orderstatus, o_orderpriority,
         |       CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
         |       CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_prio,
         |       COUNT(*) AS n
         |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin,
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin)),
 
-    "t5_gapfill" ->
+    Op("t5_gapfill", t5, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS d, COUNT(*) AS n0
         |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
@@ -1602,33 +1547,33 @@ object Relational extends graft.Registry {
         |    DATE '2024-01-01', DATE '2024-01-30', INTERVAL 1 DAY)) AS d) g)
         |SELECT s.user_id, s.d, COALESCE(daily.n0, 0) AS n
         |FROM spine s LEFT JOIN daily
-        |  ON daily.user_id = s.user_id AND daily.d = s.d""".stripMargin,
+        |  ON daily.user_id = s.user_id AND daily.d = s.d""".stripMargin)),
 
-    "j6_cooccurrence" ->
+    Op("j6_cooccurrence", j6, Some(
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |            FROM lineitem)
         |SELECT a.pk AS part_a, b.pk AS part_b, COUNT(*) AS support
         |FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin,
+        |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin)),
 
-    "j17_bloom_join" ->
+    Op("j17_bloom_join", j17, Some(
       """SELECT l_returnflag,
         |       COUNT(*) AS n,
         |       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin)),
 
-    "j11_salted_join" ->
+    Op("j11_salted_join", j11, Some(
       """WITH dim AS (SELECT DISTINCT l_returnflag AS rf FROM lineitem)
         |SELECT f.l_returnflag AS rf, 'flag_' || d.rf AS label,
         |       COUNT(*) AS n,
         |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS BIGINT)
         |         AS sum_qty
         |FROM lineitem f JOIN dim d ON f.l_returnflag = d.rf
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin)),
 
-    "j12_minmax_prune" ->
+    Op("j12_minmax_prune", j12, Some(
       """SELECT p_brand, COUNT(*) AS n,
         |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS BIGINT)
         |         AS sum_qty,
@@ -1636,9 +1581,9 @@ object Relational extends graft.Registry {
         |         AS revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE p_size = 1
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin)),
 
-    "w18_rank_suite" ->
+    Op("w18_rank_suite", w18, Some(
       """WITH o AS (
         |  SELECT o_orderkey, o_orderpriority,
         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1650,16 +1595,16 @@ object Relational extends graft.Registry {
         |       CAST(ntile(4) OVER w AS BIGINT) AS quartile
         |FROM o
         |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY cents, o_orderkey)""".stripMargin,
+        |             ORDER BY cents, o_orderkey)""".stripMargin)),
 
-    // The two item-support joins are split into MATERIALIZED CTE stages
-    // (r11, VERDICT r10 #4): spelled as one FROM, DuckDB's optimizer —
+    // The two item-support joins are split into MATERIALIZED CTE
+    // stages: spelled as one FROM, DuckDB's optimizer —
     // blind behind the CTE pipeline (every EC estimate is 0/1) — merged
     // them into a single hash join keyed on (ante, cons) whose BUILD
     // side was i × i × n, an items² CROSS_PRODUCT (~10¹⁰ rows at sf1,
     // >600 s; the staged spelling runs 3.9 s). Output byte-identical at
     // sf0.01 (validated both spellings).
-    "j9_assoc_rules" ->
+    Op("j9_assoc_rules", j9, Some(
       """WITH li AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |p AS (SELECT a.pk AS part_a, b.pk AS part_b, COUNT(*) AS sup_pair
@@ -1685,32 +1630,32 @@ object Relational extends graft.Registry {
         |            // (CAST(r3.sup_ante AS HUGEINT) * r3.sup_cons) AS BIGINT)
         |         AS lift_ppm
         |FROM r3, n
-        |WHERE (r3.sup_pair * 1000000) // r3.sup_ante >= 100000""".stripMargin,
+        |WHERE (r3.sup_pair * 1000000) // r3.sup_ante >= 100000""".stripMargin)),
 
-    "a15_histogram" ->
+    Op("a15_histogram", a15, Some(
       """SELECT CAST(least(floor((o_totalprice - 0.0) / 50000.0), 9)
         |         AS BIGINT) AS bucket,
         |       COUNT(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
+        |FROM orders GROUP BY 1""".stripMargin)),
 
-    "j7_fuzzy_block" ->
+    Op("j7_fuzzy_block", j7, Some(
       """SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
         |       a.p_name AS name_a, b.p_name AS name_b,
         |       CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
         |FROM part a JOIN part b
         |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin,
+        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin)),
 
-    "o5_group_hash_split" ->
+    Op("o5_group_hash_split", o5, Some(
       """SELECT event_id, user_id,
         |  CASE WHEN (CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
         |               AS BIGINT) % 100) < 80 THEN 'train'
         |       WHEN (CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
         |               AS BIGINT) % 100) < 90 THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
-    "o6_weighted_sample" ->
+    Op("o6_weighted_sample", o6, Some(
       """WITH d AS (
         |  SELECT doc_id, source, n_chars,
         |         CAST(round(ln((CAST(('0x' || substr(md5('ws:' || CAST(doc_id AS VARCHAR)), 1, 12))
@@ -1723,9 +1668,9 @@ object Relational extends graft.Registry {
         |         ROW_NUMBER() OVER (PARTITION BY source
         |                            ORDER BY key DESC, doc_id ASC) AS rk
         |  FROM d)
-        |SELECT source, doc_id, n_chars, rk FROM r WHERE rk <= 5""".stripMargin,
+        |SELECT source, doc_id, n_chars, rk FROM r WHERE rk <= 5""".stripMargin)),
 
-    "o7_reservoir_sample" -> {
+    Op("o7_reservoir_sample", o7, Some {
       val h = graft.llm.TextOps.hash48Sql("'rv:' || CAST(o_orderkey AS VARCHAR)")
       s"""WITH r AS (
          |  SELECT o_orderpriority, o_orderkey,
@@ -1734,9 +1679,9 @@ object Relational extends graft.Registry {
          |  FROM orders)
          |SELECT o_orderpriority, o_orderkey, CAST(rk AS BIGINT) AS rk
          |FROM r WHERE rk <= 20""".stripMargin
-    },
+    }),
 
-    "w19_running_distinct" ->
+    Op("w19_running_distinct", w19, Some(
       """WITH f AS (
         |  SELECT event_id, user_id, ts,
         |         CASE WHEN ROW_NUMBER() OVER (
@@ -1749,26 +1694,27 @@ object Relational extends graft.Registry {
         |         ORDER BY ts, event_id
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |         AS BIGINT) AS n_types
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin)),
 
-    "w17_rolling_7d" ->
+    Op("w17_rolling_7d", w17, Some(
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS od,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
         |    PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
         |    RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
         |    AS DOUBLE) AS spend_7d
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
+    Op("a8_approx_percentiles", a8approx),
 
-    "p2_set_ops" ->
+    Op("p2_set_ops", p2, Some(
       """SELECT id, 'intersect' AS op FROM
         |  (SELECT o_custkey AS id FROM orders
         |   INTERSECT SELECT user_id FROM events)
         |UNION ALL
         |SELECT id, 'except' AS op FROM
         |  (SELECT o_custkey AS id FROM orders
-        |   EXCEPT SELECT user_id FROM events)""".stripMargin,
+        |   EXCEPT SELECT user_id FROM events)""".stripMargin)),
 
-    "j5_semi_anti" ->
+    Op("j5_semi_anti", j5, Some(
       // NOT EXISTS, not NOT IN: a NULL o_custkey would make NOT IN return
       // zero rows while Spark's left_anti keeps unmatched customers —
       // NOT EXISTS matches left_anti null semantics exactly.
@@ -1776,49 +1722,49 @@ object Relational extends graft.Registry {
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         |UNION ALL
         |SELECT c_custkey, 'anti' AS op FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin)),
 
-    "f15_pii_redact" ->
+    Op("f15_pii_redact", f15, Some(
       """SELECT event_id,
         |  CAST(len(regexp_extract_all(props, '[0-9]+')) AS BIGINT)
         |    AS n_matches,
         |  TRY_CAST(regexp_extract(props, '[0-9]+') AS BIGINT) AS first_num,
         |  regexp_replace(props, '[0-9]+', '[NUM]', 'g') AS props_redacted
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
-    "f12_json_extract" ->
+    Op("f12_json_extract", f12, Some(
       """SELECT event_id, event_type,
         |       CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
         |       CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_adhoc
         |FROM events
-        |WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50""".stripMargin,
+        |WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50""".stripMargin)),
 
-    "a11_stats_agg" ->
+    Op("a11_stats_agg", a11, Some(
       """SELECT l_returnflag,
         |  round(corr(CAST(l_quantity AS DOUBLE),
         |             CAST(l_extendedprice AS DOUBLE)), 6) AS corr_qp,
         |  round(covar_samp(CAST(l_quantity AS DOUBLE),
         |                   CAST(l_extendedprice AS DOUBLE)), 6) AS covar_qp,
         |  round(stddev_samp(CAST(l_quantity AS DOUBLE)), 6) AS sd_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
 
-    "w15_topk_group" ->
+    Op("w15_topk_group", w15, Some(
       """SELECT o_orderstatus, o_orderkey, o_totalprice, rk FROM (
         |  SELECT o_orderstatus, o_orderkey, o_totalprice,
         |         row_number() OVER (PARTITION BY o_orderstatus
         |           ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders) WHERE rk <= 3""".stripMargin,
+        |  FROM orders) WHERE rk <= 3""".stripMargin)),
 
-    "o1_orderby_rand" ->
-      "SELECT n_nationkey, n_name FROM nation",
+    Op("o1_orderby_rand", o1, Some(
+      "SELECT n_nationkey, n_name FROM nation")),
 
-    "o1_rand_unseeded" ->
-      "SELECT n_nationkey, n_name FROM nation",
+    Op("o1_rand_unseeded", o1Unseeded, Some(
+      "SELECT n_nationkey, n_name FROM nation")),
 
-    "o2_sort" ->
-      "SELECT r_regionkey, r_name FROM region",
+    Op("o2_sort", o2, Some(
+      "SELECT r_regionkey, r_name FROM region")),
 
-    "f_scalar_suite" ->
+    Op("f_scalar_suite", fScalar, Some(
       """SELECT o_orderkey,
         |  CAST(o_orderdate AS DATE) AS order_date,
         |  CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '1998-01-01') AS INT)
@@ -1841,14 +1787,14 @@ object Relational extends graft.Registry {
         |  md5(o_orderpriority) AS prio_md5,
         |  substr(md5(CAST(o_custkey AS VARCHAR)), 1, 4) || '_' ||
         |    CAST(o_custkey AS VARCHAR) AS salted_key
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
 
-    "t2_recency_window" ->
+    Op("t2_recency_window", t2, Some(
       """SELECT o_custkey, COUNT(DISTINCT o_orderkey) AS frequence90,
         |  CAST(date_diff('day', MAX(CAST(o_orderdate AS DATE)), DATE '1996-06-30') AS INT)
         |    AS recent
         |FROM orders
         |WHERE CAST(o_orderdate AS DATE) >= DATE '1996-06-30' - 90
         |  AND CAST(o_orderdate AS DATE) <= DATE '1996-06-30'
-        |GROUP BY o_custkey""".stripMargin)
+        |GROUP BY o_custkey""".stripMargin)))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.types._
 
+import graft.Op
 import graft.util.Cols._
 
 /** µs-held timestamp codec shared by the stateful ops (the
@@ -726,19 +727,7 @@ object StreamingWindows extends graft.Registry {
       .filter(col("rn") === 1).drop("rn")
   }
 
-  val queries: Map[String, Q] = Map(
-    "st_running_counts" -> stRunningCounts,
-    "st_sliding"      -> stSliding,
-    "st_sessionize"   -> stSessionize,
-    "st_latest_state" -> stLatestState,
-    "st_tumbling"     -> stTumbling,
-    "st_range_join"   -> stRangeJoin,
-    "st_left_join"    -> stLeftJoin,
-    "st_enrich"       -> stEnrich,
-    "st_dedup"        -> stDedup,
-    "st_index_update" -> stIndexUpdate)
-
-  val oracles: Map[String, String] = Map(
+  val ops: Seq[Op] = Seq(
     // ev_session's batch spelling, minus each user's final session when
     // it is still inside the finalization watermark. Events are
     // PRE-AGGREGATED by (user_id, ts) first: with raw rows, the lag and
@@ -746,7 +735,7 @@ object StreamingWindows extends graft.Registry {
     // (unstable sorts in two separate window operators) and split a tie
     // across sessions nondeterministically — on distinct timestamps both
     // windows have a total order.
-    "st_sessionize" ->
+    Op("st_sessionize", stSessionize, Some(
       """WITH e AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS t,
         |         COUNT(*) AS nr, SUM(CAST(value AS DECIMAL(18,2))) AS v
@@ -776,18 +765,18 @@ object StreamingWindows extends graft.Registry {
         |  FROM g, mx)
         |SELECT user_id, s_start, s_end, n_events, sum_value
         |FROM r WHERE rk > 1
-        |   OR (epoch_us(s_end) // 1000) < (epoch_us(max_ts) // 1000) - 1800000""".stripMargin,
+        |   OR (epoch_us(s_end) // 1000) < (epoch_us(max_ts) // 1000) - 1800000""".stripMargin)),
 
     // the batch running-count final state: count + µs-exact max ts
-    "st_running_counts" ->
+    Op("st_running_counts", stRunningCounts, Some(
       """SELECT user_id, COUNT(*) AS n,
         |       MAX(CAST(ts AS TIMESTAMP)) AS last_ts
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin)),
 
     // each event expands to its 4 covering windows (duration/slide = 4,
     // epoch-aligned like Spark's default startTime=0), then the same
     // non-strict finalization boundary as st_tumbling
-    "st_sliding" ->
+    Op("st_sliding", stSliding, Some(
       """WITH x AS (
         |  SELECT CAST(ts AS TIMESTAMP) AS t, event_type,
         |         CAST(value AS DECIMAL(18,2)) AS v
@@ -804,9 +793,9 @@ object StreamingWindows extends graft.Registry {
         |mx AS (SELECT MAX(CAST(ts AS TIMESTAMP)) AS max_ts FROM events)
         |SELECT w_start, w_end, event_type, n, sum_value
         |FROM g, mx
-        |WHERE (epoch_us(w_end) // 1000) <= (epoch_us(max_ts) // 1000) - 3600000""".stripMargin,
+        |WHERE (epoch_us(w_end) // 1000) <= (epoch_us(max_ts) // 1000) - 3600000""".stripMargin)),
 
-    "st_tumbling" ->
+    Op("st_tumbling", stTumbling, Some(
       """WITH g AS (
         |  SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS w_start,
         |         time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) + INTERVAL '1 hour' AS w_end,
@@ -816,20 +805,20 @@ object StreamingWindows extends graft.Registry {
         |mx AS (SELECT MAX(CAST(ts AS TIMESTAMP)) AS max_ts FROM events)
         |SELECT w_start, w_end, event_type, n, sum_value
         |FROM g, mx
-        |WHERE (epoch_us(w_end) // 1000) <= (epoch_us(max_ts) // 1000) - 3600000""".stripMargin,
+        |WHERE (epoch_us(w_end) // 1000) <= (epoch_us(max_ts) // 1000) - 3600000""".stripMargin)),
 
     // stateless enrichment: the plain left join (the harness compares
     // columns sorted by NAME, so the USING-join's user_id-first column
     // order on the Spark side doesn't matter)
-    "st_enrich" ->
+    Op("st_enrich", stEnrich, Some(
       """SELECT e.event_id, e.user_id, e.event_type, e.value,
         |       c.c_name, c.c_mktsegment
-        |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id""".stripMargin,
+        |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id""".stripMargin)),
 
     // the batch range join's spelling verbatim (ev_range_join): inner
     // stream-stream pairs emit on match, so the drained set is the full
     // batch answer — no finalization predicate needed.
-    "st_range_join" ->
+    Op("st_range_join", stRangeJoin, Some(
       """SELECT p.event_id AS p_id, p.user_id AS user_id,
         |       CAST(p.ts AS TIMESTAMP) AS p_ts,
         |       v.event_id AS v_id, CAST(v.ts AS TIMESTAMP) AS v_ts,
@@ -838,7 +827,7 @@ object StreamingWindows extends graft.Registry {
         |  ON v.user_id = p.user_id
         | AND CAST(v.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL '12 hours'
         | AND CAST(v.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)
-        |WHERE p.event_type = 'purchase' AND v.event_type = 'view'""".stripMargin,
+        |WHERE p.event_type = 'purchase' AND v.event_type = 'view'""".stripMargin)),
 
     // the inner pairs (batch-identical, emitted on match) plus the
     // null-extended purchases the finalization batch EVICTED: no
@@ -846,7 +835,7 @@ object StreamingWindows extends graft.Registry {
     // global watermark = min(per-side ms-floored max event time) −
     // delay — the min-policy over the two watermarked sources, spelled
     // µs-exactly like st_sessionize's boundary.
-    "st_left_join" ->
+    Op("st_left_join", stLeftJoin, Some(
       """WITH m AS (
         |  SELECT p.event_id AS p_id, p.user_id AS user_id,
         |         CAST(p.ts AS TIMESTAMP) AS p_ts,
@@ -877,26 +866,27 @@ object StreamingWindows extends graft.Registry {
         |      WHERE v.event_type = 'view' AND v.user_id = p.user_id
         |        AND CAST(v.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL '12 hours'
         |        AND CAST(v.ts AS TIMESTAMP) < CAST(p.ts AS TIMESTAMP)))
-        |SELECT * FROM m UNION ALL SELECT * FROM u""".stripMargin,
+        |SELECT * FROM m UNION ALL SELECT * FROM u""".stripMargin)),
 
-    "st_latest_state" ->
+    Op("st_latest_state", stLatestState, Some(
       """WITH r AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value, event_id,
         |         ROW_NUMBER() OVER (PARTITION BY user_id
         |           ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
         |  FROM events)
         |SELECT user_id, ts, event_type, value, event_id
-        |FROM r WHERE rn = 1""".stripMargin,
+        |FROM r WHERE rn = 1""".stripMargin)),
 
     // two identical deliveries collapse to the batch relation: one row
     // per event_id (event_id is the table's unique key, so "first seen
     // wins" and DISTINCT coincide — no tie to adjudicate)
-    "st_dedup" ->
+    Op("st_dedup", stDedup, Some(
       """SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
         |       event_type, value, props
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
     // the stateless stream-static encode drains to EXACTLY the batch
     // twin's rows — the oracle is sim_index_update's, verbatim
-    "st_index_update" -> graft.llm.Similarity.oracles("sim_index_update"))
+    Op("st_index_update", stIndexUpdate,
+      Some(graft.llm.Similarity.indexUpdateOracle)))
 }

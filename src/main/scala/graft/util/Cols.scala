@@ -21,17 +21,9 @@ object Cols {
   /** sum(x) computed exactly in decimal, emitted as double. */
   def dsum(c: Column): Column = sum(dec2(c)).cast("double")
 
-  /** sum(x*y) for 2-decimal x,y — exact decimal product then sum. */
-  def dsumProd(x: Column, y: Column): Column =
-    sum(dec2(x) * dec2(y)).cast("double")
-
   /** x * (1 - y) in exact decimal space (TPC-H disc_price shape). */
   def discPrice(price: Column, discount: Column): Column =
     (dec2(price) * (lit(1).cast(Money) - dec2(discount))).cast("double")
-
-  /** Exact mean: decimal sum → double, divided by count (IEEE-identical
-    * across engines given identical numerator/denominator). */
-  def dmean(c: Column): Column = dsum(c) / count(c)
 
   val Money4: DecimalType = DecimalType(18, 4)
 

@@ -3,7 +3,7 @@ package graft.encode
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Planted-truth + leakage laws for the dictionary-free encoders. */
 class EncodersSpec extends SparkSpec {
@@ -17,7 +17,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = Files.createTempDirectory("enc-fh").toString
     events.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val got = Encoders.queries("enc_feature_hash")(spark, d)
+    val got = SparkEntry.queries("enc_feature_hash")(spark, d)
       .select($"feature_idx").as[Long].collect().toSet
     val expected = Set("et:click", "hr:13", "uk:2") // 130 % 64 = 2
       .map(f => graft.llm.TextOps.hash48Jvm(f) % 1024)
@@ -27,9 +27,9 @@ class EncodersSpec extends SparkSpec {
   test("feature hash: stateless — a repartitioned input encodes identically") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val a = Encoders.queries("enc_feature_hash")(spark, dir)
+    val a = SparkEntry.queries("enc_feature_hash")(spark, dir)
       .as[(Long, Long)].collect().sorted.toSeq
-    val b = Encoders.queries("enc_feature_hash")(spark, dir)
+    val b = SparkEntry.queries("enc_feature_hash")(spark, dir)
       .repartition(7).as[(Long, Long)].collect().sorted.toSeq
     assert(a.nonEmpty && a == b)
   }
@@ -55,7 +55,7 @@ class EncodersSpec extends SparkSpec {
     val d = Files.createTempDirectory("enc-te").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Encoders.queries("m12_target_encode")(spark, d)
+    val out = SparkEntry.queries("m12_target_encode")(spark, d)
       .select($"c_mktsegment", $"n_train", $"n_pos", $"te_smooth")
       .as[(String, Long, Long, Double)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
@@ -70,7 +70,7 @@ class EncodersSpec extends SparkSpec {
     customers.write.mode("overwrite").parquet(s"$d2/customer.parquet")
     spark.read.parquet(s"$d/orders2.parquet")
       .write.mode("overwrite").parquet(s"$d2/orders.parquet")
-    val out2 = Encoders.queries("m12_target_encode")(spark, d2)
+    val out2 = SparkEntry.queries("m12_target_encode")(spark, d2)
       .select($"c_mktsegment", $"n_train", $"n_pos", $"te_smooth")
       .as[(String, Long, Long, Double)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
@@ -84,7 +84,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("c_custkey", "c_acctbal")
     val d = Files.createTempDirectory("enc-std").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
-    val out = Encoders.queries("m25_standard_scaler")(spark, d)
+    val out = SparkEntry.queries("m25_standard_scaler")(spark, d)
       .select($"c_custkey", $"z_ppm").as[(Long, Long)].collect().toMap
     val cents = bals.map(b => math.round(b * 100))
     val n = cents.size.toLong
@@ -101,7 +101,7 @@ class EncodersSpec extends SparkSpec {
     // constant column → σ = 0 → pinned 0
     Seq((9L, 5.00), (10L, 5.00)).toDF("c_custkey", "c_acctbal")
       .write.mode("overwrite").parquet(s"$d/customer.parquet")
-    val const = Encoders.queries("m25_standard_scaler")(spark, d)
+    val const = SparkEntry.queries("m25_standard_scaler")(spark, d)
       .select($"z_ppm").as[Long].collect()
     assert(const.forall(_ == 0L))
   }
@@ -124,7 +124,7 @@ class EncodersSpec extends SparkSpec {
     val d = Files.createTempDirectory("enc-apply").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Encoders.queries("m12_target_apply")(spark, d)
+    val out = SparkEntry.queries("m12_target_apply")(spark, d)
       .as[(Long, String, Double)].collect()
     assert(out.length == aTrain.size + cTest.size)
     val prior = 4.0 / 10.0
@@ -141,7 +141,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("l_quantity", "l_extendedprice", "l_discount")
     val d = Files.createTempDirectory("enc-corr").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Encoders.queries("m22_corr")(spark, d)
+    val out = SparkEntry.queries("m22_corr")(spark, d)
       .select($"var_x", $"var_y", $"n", $"sgn", $"r2_ppm")
       .as[(String, String, Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4, r._5)).toMap
@@ -152,7 +152,7 @@ class EncodersSpec extends SparkSpec {
     (1 to 5).map(q => (q.toDouble, (6 - q) * 0.02, 0.05))
       .toDF("l_quantity", "l_extendedprice", "l_discount")
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val neg = Encoders.queries("m22_corr")(spark, d)
+    val neg = SparkEntry.queries("m22_corr")(spark, d)
       .select($"var_x", $"var_y", $"sgn", $"r2_ppm")
       .as[(String, String, Long, Long)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
@@ -181,7 +181,7 @@ class EncodersSpec extends SparkSpec {
     val dd = rows.map(r => BigInt(r._3)).toSeq
     val want = Map(("qty", "ep") -> stats(q, e), ("qty", "disc") -> stats(q, dd),
       ("ep", "disc") -> stats(e, dd))
-    val got = Encoders.queries("m22_corr")(spark, dir)
+    val got = SparkEntry.queries("m22_corr")(spark, dir)
       .select($"var_x", $"var_y", $"sgn", $"r2_ppm")
       .as[(String, String, Long, Long)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
@@ -212,7 +212,7 @@ class EncodersSpec extends SparkSpec {
     rows.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
       "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Encoders.queries("m13_woe_iv")(spark, d)
+    val out = SparkEntry.queries("m13_woe_iv")(spark, d)
       .as[(String, Long, Long, Long, Long)].collect().toSet
     assert(out == Set(
       ("X", 3L, 1L, 847298L, 424L),
@@ -237,7 +237,7 @@ class EncodersSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("enc-qb").toString
     ordersAt((1 to 20).map(_ * 2500.0))
       .write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Encoders.queries("m14_quantile_bins")(spark, d)
+    val out = SparkEntry.queries("m14_quantile_bins")(spark, d)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     val expected = (0 until 10).map { k =>
       (k.toLong, 2L, 250000L * (2 * k + 1), 250000L * (2 * k + 2)) }
@@ -252,7 +252,7 @@ class EncodersSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("enc-qb-tie").toString
     ordersAt(Seq.fill(10)(99.99))
       .write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Encoders.queries("m14_quantile_bins")(spark, d)
+    val out = SparkEntry.queries("m14_quantile_bins")(spark, d)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     val expected = (0 until 10).map(k => (k.toLong, 1L, 9999L, 9999L))
     assert(out == expected)
@@ -264,7 +264,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("c_custkey", "c_acctbal")
     val d = Files.createTempDirectory("enc-mm").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
-    val out = Encoders.queries("m15_minmax_scaler")(spark, d)
+    val out = SparkEntry.queries("m15_minmax_scaler")(spark, d)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     // 333 cents of [0,1000] → floor(333·10⁶/1000) = 333000 ppm exactly
     assert(out == Seq((1L, 0L, 0L), (2L, 500L, 500000L),
@@ -281,7 +281,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("c_custkey", "c_acctbal")
     val d = Files.createTempDirectory("enc-rb").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
-    val out = Encoders.queries("m16_robust_scaler")(spark, d)
+    val out = SparkEntry.queries("m16_robust_scaler")(spark, d)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     val expect = (0 until 10).map(k =>
       ((k + 1).toLong, k * 100L,
@@ -296,7 +296,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("c_custkey", "c_acctbal")
     val d = Files.createTempDirectory("enc-rb2").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
-    val out = Encoders.queries("m16_robust_scaler")(spark, d)
+    val out = SparkEntry.queries("m16_robust_scaler")(spark, d)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(out == Seq((1L, 500L, 0L), (2L, 500L, 0L), (3L, 500L, 0L)))
   }
@@ -307,7 +307,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("c_custkey", "c_acctbal")
     val d = Files.createTempDirectory("enc-mm2").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
-    val out = Encoders.queries("m15_minmax_scaler")(spark, d)
+    val out = SparkEntry.queries("m15_minmax_scaler")(spark, d)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(out == Seq((1L, 777L, 0L), (2L, 777L, 0L)))
   }
@@ -337,7 +337,7 @@ class EncodersSpec extends SparkSpec {
     val d = Files.createTempDirectory("enc-chi2").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Encoders.queries("m20_chi2_rank")(spark, d)
+    val out = SparkEntry.queries("m20_chi2_rank")(spark, d)
       .as[(String, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
     // N=24, P=12; seg cells: A (o1=10,o0=2), B (o1=2,o0=10)
@@ -354,7 +354,7 @@ class EncodersSpec extends SparkSpec {
 
   test("m20 chi2: real data yields all three features with non-negative scores") {
     import spark.implicits._
-    val out = Encoders.queries("m20_chi2_rank")(spark, "/root/testdata/sf0.001")
+    val out = SparkEntry.queries("m20_chi2_rank")(spark, "/root/testdata/sf0.001")
       .as[(String, Long, Long, Long)].collect()
     assert(out.length == 3 && out.forall(_._4 >= 0L))
   }
@@ -370,7 +370,7 @@ class EncodersSpec extends SparkSpec {
       .toDF("c_custkey", "c_mktsegment", "c_nationkey", "c_acctbal")
     val d = Files.createTempDirectory("enc-imp").toString
     customers.write.mode("overwrite").parquet(s"$d/customer.parquet")
-    val out = Encoders.queries("m21_impute_fit")(spark, d)
+    val out = SparkEntry.queries("m21_impute_fit")(spark, d)
       .as[(String, Long, Long, Long, Long)].collect()
     assert(out.length == 1)
     val (segName, nObs, nMiss, meanFill, modeFill) = out.head

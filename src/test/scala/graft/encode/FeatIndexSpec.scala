@@ -9,7 +9,9 @@ import graft.SparkSpec
 /** S4/S5/K6 regression against the reference's own 19-row sample
   * fixtures (LR/data/churn_train_sample.{csv,svm} + the 186-entry
   * churn_featindex.txt). The fixtures are read from the read-only
-  * reference checkout at test time; suites skip (assume) if absent. */
+  * reference checkout at test time; those three tests cancel (assume)
+  * if it is absent, and their reference-free twins check the same codec
+  * on synthetic fixtures. */
 class FeatIndexSpec extends SparkSpec {
 
   private val RefData = "/root/reference/LR/data"
@@ -64,6 +66,53 @@ class FeatIndexSpec extends SparkSpec {
     }
   }
 
+  // Reference-free twins of the three tests above: a synthetic
+  // dictionary in the same `i:value idx` format (three fields, each with
+  // its `other` slot) and a synthetic CSV laid out like the reference
+  // sample (id column first, label last).
+  private def synthetic(): (String, String) = {
+    val d = Files.createTempDirectory("featindex-synth")
+    val dict = d.resolve("featindex.txt")
+    Files.writeString(dict, Seq("0:other 0", "0:a 1", "0:b 2", "1:other 3",
+      "1:x 4", "2:other 5", "2:p 6", "2:q 7").mkString("", "\n", "\n"))
+    val csv = d.resolve("sample.csv")
+    Files.writeString(csv, Seq("USR_NUM_ID,f0,f1,f2,label", "u1,a,x,p,1",
+      "u2,b,zz,q,0", "u3,zz,x,zz,1").mkString("", "\n", "\n"))
+    (dict.toString, csv.toString)
+  }
+
+  private def syntheticEncoded() = {
+    val (dictPath, csvPath) = synthetic()
+    val dict = FeatIndex.loadDictFile(dictPath)
+    val csv = spark.read.option("header", "true").csv(csvPath)
+    val fields = csv.columns.drop(1).dropRight(1).toSeq
+    FeatIndex.encode(csv, fields, "label", dict)
+  }
+
+  test("synthetic featindex dictionary parses with per-field other slots") {
+    val dict = FeatIndex.loadDictFile(synthetic()._1)
+    assert(dict.size == 8)
+    assert(dict("0:other") == 0 && dict("1:other") == 3 && dict("2:other") == 5)
+    val fields = dict.keys.map(_.split(":")(0).toInt).toSet
+    assert(fields == Set(0, 1, 2))
+    fields.foreach(f => assert(dict.contains(s"$f:other")))
+  }
+
+  test("encoding a synthetic CSV reproduces hand-written zero-based lines byte-for-byte") {
+    import spark.implicits._
+    val lines = FeatIndex.toLibsvmLines(syntheticEncoded()).as[String].collect()
+    assert(lines.toSeq == Seq("1 1:1 4:1 6:1", "0 2:1 3:1 7:1", "1 0:1 4:1 5:1"))
+  }
+
+  test("dense scatter (S5) puts exactly the encoded ones in a synthetic 8-dim vector") {
+    val rows = FeatIndex.toDenseVector(syntheticEncoded(), 8)
+      .select("features").collect()
+      .map(_.getAs[org.apache.spark.ml.linalg.Vector](0).toArray.toSeq)
+    def hot(idx: Int*): Seq[Double] =
+      (0 until 8).map(d => if (idx.contains(d)) 1.0 else 0.0)
+    assert(rows.toSeq == Seq(hot(1, 4, 6), hot(2, 3, 7), hot(0, 4, 5)))
+  }
+
   test("unseen value falls back to the field's other slot") {
     import spark.implicits._
     val dict = Map("0:other" -> 0, "0:x" -> 1, "1:other" -> 2, "1:y" -> 3)
@@ -97,17 +146,15 @@ class FeatIndexSpec extends SparkSpec {
       (1.0, Seq(0, 100002))))
   }
 
-  test("libsvm write is distributed by default; single file only on opt-in") {
+  test("libsvm write is distributed: one part file per input partition") {
     import spark.implicits._
     val lines = spark.range(0, 1000, 1, 8)
       .select(concat($"id".cast("string"), lit(" 1:1")).as("value"))
     val tmp = Files.createTempDirectory("libsvm-parts").toString
     FeatIndex.writeLibsvmText(lines, s"$tmp/multi")
-    FeatIndex.writeLibsvmText(lines, s"$tmp/single", singleFile = true)
     def parts(p: String): Int =
       new java.io.File(p).listFiles().count(_.getName.startsWith("part-"))
     assert(parts(s"$tmp/multi") == 8)  // one file per input partition
-    assert(parts(s"$tmp/single") == 1) // fixture-fidelity opt-in
     // distributed parts glob back to the same content
     assert(spark.read.text(s"$tmp/multi").count() == 1000L)
   }

@@ -3,7 +3,7 @@ package graft.eval
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class MetricsSpec extends SparkSpec {
 
@@ -65,7 +65,7 @@ class MetricsSpec extends SparkSpec {
   test("e7 confusion matrix: marginals are consistent and the planted diagonal dominates") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val rows = Metrics.queries("e7_multiclass_confusion")(spark, dir)
+    val rows = SparkEntry.queries("e7_multiclass_confusion")(spark, dir)
       .as[(String, String, Long, Long, Long, Long, Long)].collect()
     assert(rows.nonEmpty)
     // row marginal = Σ cells of the actual class; ppm = exact floor
@@ -114,7 +114,7 @@ class MetricsSpec extends SparkSpec {
       keys.count(k => score(k) < t && label(k) == 1L).toLong,
       keys.count(k => score(k) < t && label(k) == 0L).toLong)
 
-    val out = Metrics.queries("e5_pr_curve")(spark, d)
+    val out = SparkEntry.queries("e5_pr_curve")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long, Long, Long)]
       .collect().sortBy(_._1)
     assert(out.length == 11)
@@ -161,7 +161,7 @@ class MetricsSpec extends SparkSpec {
       (bin, (n, nPos, exp, obs, math.abs(exp - obs)))
     }
 
-    val out = Metrics.queries("e6_calibration")(spark, d)
+    val out = SparkEntry.queries("e6_calibration")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
     assert(out.map(_._1).toSet.subsetOf((0L to 9L).toSet))
     assert(out.map(_._2).sum == 30L, "bins must partition the batch")

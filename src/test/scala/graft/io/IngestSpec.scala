@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Ingest robustness — the two properties a 100 TB feed pipeline needs
   * from its scan layer beyond happy-path parsing:
@@ -118,7 +118,7 @@ class IngestSpec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     val d = Files.createTempDirectory("k10-spec").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Sinks.queries("k10_dynamic_overwrite")(spark, d)
+    val out = SparkEntry.queries("k10_dynamic_overwrite")(spark, d)
       .as[(String, Long, Long)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     // F halved (10000→5000, 5000→2500); O and P SURVIVE the second
@@ -139,7 +139,7 @@ class IngestSpec extends SparkSpec {
       .toDF("o_orderkey", "o_totalprice")
     val d = Files.createTempDirectory("s15-spec").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Sinks.queries("s15_json_quarantine")(spark, d)
+    val out = SparkEntry.queries("s15_json_quarantine")(spark, d)
       .as[(Long, Long, Long)].collect().head
     assert(out == ((4L, 2L, 3000L))) // 4 rows, 2 quarantined, 1000+2000 cents
   }
@@ -171,7 +171,7 @@ class IngestSpec extends SparkSpec {
     Seq((1L, "HIGH", "F"), (2L, "LOW", "O"))
       .toDF("o_orderkey", "o_orderpriority", "o_orderstatus")
       .write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Sinks.queries("s14_csv_quirks")(spark, d)
+    val out = SparkEntry.queries("s14_csv_quirks")(spark, d)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(out == Seq((1L, "HIGH, \"q\"\nF"), (2L, "LOW, \"q\"\nO")))
     // find the written csv in the process scratch and inspect raw bytes
@@ -191,7 +191,7 @@ class IngestSpec extends SparkSpec {
       .toDF("o_orderkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$d/orders.parquet")
     val Seq((nRows, sumCents, nKeys, before, after)) =
-      Sinks.queries("k9_compaction")(spark, d)
+      SparkEntry.queries("k9_compaction")(spark, d)
         .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(nRows == n && nKeys == n)
     assert(sumCents == (1 to n).map(_ * 100L).sum)

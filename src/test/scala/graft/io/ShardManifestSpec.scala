@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.llm.TextOps.hash48Jvm
 
 /** k9_shard_manifest: the full manifest is replayed driver-side in plain
@@ -34,7 +34,7 @@ class ShardManifestSpec extends SparkSpec {
 
   test("k9 manifest equals the plain-Scala replay shard by shard") {
     import spark.implicits._
-    val got = Layout.queries("k9_shard_manifest")(spark, dir)
+    val got = SparkEntry.queries("k9_shard_manifest")(spark, dir)
       .select($"shard_id", $"n_docs", $"n_chars", $"head_doc_id",
         $"tail_doc_id", $"checksum48")
       .as[(Long, Long, Long, Long, Long, Long)].collect()
@@ -53,7 +53,7 @@ class ShardManifestSpec extends SparkSpec {
 
   test("k9 manifest conserves the corpus and is partition-invariant") {
     import spark.implicits._
-    val m = Layout.queries("k9_shard_manifest")(spark, dir)
+    val m = SparkEntry.queries("k9_shard_manifest")(spark, dir)
     val (docs, chars) = m.agg(sum($"n_docs"), sum($"n_chars"))
       .as[(Long, Long)].head()
     val (wantDocs, wantChars) = graft.Tables.load(spark, dir, "documents")
@@ -64,7 +64,7 @@ class ShardManifestSpec extends SparkSpec {
     val conf = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "5")
-      val again = Layout.queries("k9_shard_manifest")(spark, dir)
+      val again = SparkEntry.queries("k9_shard_manifest")(spark, dir)
         .orderBy($"shard_id").collect().toSeq
       assert(again == base)
     } finally spark.conf.set("spark.sql.shuffle.partitions", conf)

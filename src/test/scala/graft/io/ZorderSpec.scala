@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Z-order layout: bit-math laws for the Morton curve, and the measured
   * data-skipping claim — per-file min/max boxes from a z-ordered write
@@ -33,7 +33,7 @@ class ZorderSpec extends SparkSpec {
   test("skipping: z-order prunes both dims; linear sort leaves one unprunable") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val zd = Layout.queries("k8_zorder")(spark, dir)
+    val zd = SparkEntry.queries("k8_zorder")(spark, dir)
     val orders = graft.Tables.load(spark, dir, "orders")
       .join(zd, "o_orderkey")
       .select($"o_orderkey", $"o_custkey",

@@ -54,41 +54,77 @@ class AnnIndexSpec extends SparkSpec {
     graft.util.Scratch.deleteRecursively(d)
   }
 
+  /** A sig dir whose `_FP` sidecar names the corpus in `corpus`. */
+  private def sigDir(parent: Path, sig: String, corpus: Path): Path = {
+    val sd = Files.createDirectories(parent.resolve(s"sig=$sig"))
+    Files.writeString(sd.resolve("_FP"),
+      AnnIndex.fsFingerprint(corpus.toString) + "\n")
+    sd
+  }
+
+  private def corpus(d: Path, n: Int, salt: Int): Unit = {
+    import spark.implicits._
+    (0 until n).map { i =>
+      (i.toLong, Array.tabulate(AnnIndex.Dim)(j =>
+        ((i * 37 + j * 11 + salt) % 89) / 89f - 0.5f))
+    }.toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
+  }
+
   test("sweep prunes same-tier stale sigs and dead temps, keeps the rest") {
+    // A tier is one corpus directory: a stale sig is a sibling whose
+    // `_FP` sidecar names the directory being trained.
     val d = tmpDir("graft-annidx-sweep")
-    val keep = d.resolve("sig=500_1_1")
-    val staleSameTier = d.resolve("sig=500_9_9")
-    val otherTier = d.resolve("sig=600_1_1")
+    val here = tmpDir("graft-annidx-corpus-a")
+    val there = tmpDir("graft-annidx-corpus-b")
+    val keep = sigDir(d, "500_1_1", here)
+    val staleSameTier = sigDir(d, "500_9_9", here)
+    val otherTier = sigDir(d, "500_2_2", there) // same count, other corpus
+    val noSidecar = Files.createDirectories(d.resolve("sig=600_1_1"))
     val deadTmp = d.resolve("_tmp-sig=500_9_9-999999999") // pid can't exist
     val liveTmp = d.resolve(
       s"_tmp-sig=500_8_8-${ProcessHandle.current().pid()}")
-    Seq(keep, staleSameTier, otherTier, deadTmp, liveTmp)
-      .foreach(Files.createDirectories(_))
-    AnnIndex.sweep(keep.toString, "500_1_1")
+    Seq(deadTmp, liveTmp).foreach(Files.createDirectories(_))
+    AnnIndex.sweep(keep.toString, "500_1_1", here.toString)
     assert(Files.exists(keep), "current artifact must survive")
     assert(!Files.exists(staleSameTier),
       "same-tier regenerated-corpus leftover must be pruned")
-    assert(Files.exists(otherTier),
+    assert(Files.exists(otherTier) && Files.exists(noSidecar),
       "other sf tiers' artifacts must survive (bench would retrain)")
     assert(!Files.exists(deadTmp), "dead writer's temp must be swept")
     assert(Files.exists(liveTmp), "live writer's in-flight temp is not ours")
-    graft.util.Scratch.deleteRecursively(d)
+    Seq(d, here, there).foreach(graft.util.Scratch.deleteRecursively(_))
   }
 
   test("store stays bounded: exactly one sig dir per tier after ensure") {
-    // The judge's #4 done-criterion: ensure*() prunes, so the oracle's
-    // componentGlob scans a file list whose size is independent of how
-    // many corpus generations this tier has seen.
+    // ensure*() prunes, so the oracle's componentGlob scans a file list
+    // whose size is independent of how many corpus generations this
+    // tier (corpus directory) has seen.
     val dir = "/root/testdata/sf0.01"
     val (bp, cp) = AnnIndex.ensurePqPaths(spark, dir)
-    val tier = AnnIndex.sig(spark, dir).takeWhile(_ != '_')
+    val tier = AnnIndex.fpPrefix(dir)
     Seq(bp, cp).foreach { comp =>
       val parent = Paths.get(comp).getParent
       val sameTier = Files.list(parent).filter(p =>
-        p.getFileName.toString.startsWith(s"sig=${tier}_")).count()
+        AnnIndex.storedFps(p).exists(_.startsWith(tier))).count()
       assert(sameTier == 1L,
-        s"expected exactly one sig=${tier}_* dir under $parent, got $sameTier")
+        s"expected exactly one sig dir of $dir under $parent, got $sameTier")
     }
+  }
+
+  test("ensure keeps another corpus's artifacts at the same row count") {
+    // sf0.001 and sf0.01 both hold 500 embeddings: an ensure at one
+    // tier must not prune the other's artifacts.
+    val a = tmpDir("graft-annidx-tier-a")
+    val b = tmpDir("graft-annidx-tier-b")
+    corpus(a, 120, salt = 1)
+    corpus(b, 120, salt = 2)
+    val paths = Seq(a, b).map(d => AnnIndex.ensureIvfPaths(spark, d.toString))
+    assert(paths(0) != paths(1), "distinct corpora must get distinct sigs")
+    for ((kp, cp) <- paths; p <- Seq(kp, cp))
+      assert(AnnIndex.ready(p), s"$p must survive the other tier's ensure")
+    for ((kp, cp) <- paths; p <- Seq(kp, cp))
+      graft.util.Scratch.deleteRecursively(Paths.get(p))
+    Seq(a, b).foreach(graft.util.Scratch.deleteRecursively(_))
   }
 
   test("ensure records exactly the fingerprint its sig was resolved from") {

@@ -2,7 +2,7 @@ package graft.llm
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** BPE trainer laws — this op is in the no-oracle set (iterative array
   * fixpoint), so the spec carries the whole verification burden:
@@ -79,7 +79,7 @@ class BpeSpec extends SparkSpec {
   test("encode: tokens, words, and exact chars_per_token on the tiny corpus") {
     import spark.implicits._
     val dir = docsDir(Seq("aaab aaab cd", "aaab cd"))
-    val out = Bpe.queries("d_bpe_encode")(spark, dir)
+    val out = SparkEntry.queries("d_bpe_encode")(spark, dir)
       .as[(Long, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
     // 5 rounds exhaust merges on this corpus: aaab → [aaab</w>] 1 token,
     // cd → [cd</w>] 1 token eventually. doc 0 = aaab aaab cd → 3 words,

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Dedup semantics on a corpus with PLANTED duplicates (the driver
   * testdata has organic near-dups; here we control ground truth). */
@@ -51,17 +51,17 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("contain-spec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = Dedup.queries("dedup_containment")(spark, d)
+    val out = SparkEntry.queries("dedup_containment")(spark, d)
       .select($"id_a", $"id_b", $"contained_id", $"containment", $"jaccard")
       .as[(Long, Long, Long, Double, Double)].collect().toSeq
     assert(out == Seq((10L, 11L, 11L, 1.0, 10.0 / 31.0)))
     // the jaccard query at its 0.8 threshold indeed misses the pair
-    assert(Dedup.queries("dedup_ngram_jaccard")(spark, d).count() == 0L)
+    assert(SparkEntry.queries("dedup_ngram_jaccard")(spark, d).count() == 0L)
   }
 
   test("exact dedup groups identical texts under the smallest doc_id") {
     import spark.implicits._
-    val out = Dedup.queries("dedup_exact")(spark, dir)
+    val out = SparkEntry.queries("dedup_exact")(spark, dir)
       .orderBy($"canonical_id")
       .select($"canonical_id", $"n_copies").as[(Long, Long)].collect().toSeq
     assert(out == Seq((0L, 2L), (2L, 1L), (3L, 1L)))
@@ -87,7 +87,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhash of near-dups is close in hamming distance, unrelated is far") {
     import spark.implicits._
-    val sh = TextOps.queries("d_simhash")(spark, dir)
+    val sh = SparkEntry.queries("d_simhash")(spark, dir)
       .as[(Long, Long)].collect().toMap
     def ham(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(0L), sh(1L)) == 0)            // identical text
@@ -97,7 +97,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash signature estimates jaccard for the near pair") {
     import spark.implicits._
-    val sig = TextOps.queries("d_minhash_sig")(spark, dir).collect()
+    val sig = SparkEntry.queries("d_minhash_sig")(spark, dir).collect()
       .map(r => r.getLong(0) -> (1 to 8).map(r.getLong).toSeq).toMap
     val agree02 = sig(0L).zip(sig(2L)).count { case (a, b) => a == b }
     val agree03 = sig(0L).zip(sig(3L)).count { case (a, b) => a == b }
@@ -396,7 +396,7 @@ class DedupSpec extends SparkSpec {
         if hits.map(_._2).distinct.size >= 2 => w }.toSet
     val expected = byDoc.map { case (id, ws) =>
       (id, ws.size.toLong, ws.count(dupSet).toLong) }.toSet
-    val out = Dedup.queries("dedup_substring")(spark, d)
+    val out = SparkEntry.queries("dedup_substring")(spark, d)
       .as[(Long, Long, Long)].collect().toSet
     assert(out == expected)
     // the planted truth is non-trivial: both copies detected, control clean
@@ -407,12 +407,12 @@ class DedupSpec extends SparkSpec {
   test("sketch eval: the metric row is consistent with its two underlying pair queries") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val pred = Dedup.queries("dedup_minhash")(spark, sf)
+    val pred = SparkEntry.queries("dedup_minhash")(spark, sf)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    val truth = Dedup.queries("dedup_ngram_jaccard")(spark, sf)
+    val truth = SparkEntry.queries("dedup_ngram_jaccard")(spark, sf)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     val Seq((nPred, nTrue, tp, fp, fn, prec, rec)) =
-      Dedup.queries("dedup_sketch_eval")(spark, sf)
+      SparkEntry.queries("dedup_sketch_eval")(spark, sf)
         .as[(Long, Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(nPred == pred.size && nTrue == truth.size)
     assert(tp == (pred intersect truth).size)

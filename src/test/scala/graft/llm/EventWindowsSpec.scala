@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Session/tumbling window semantics on a controlled events table. */
 class EventWindowsSpec extends SparkSpec {
@@ -30,7 +30,7 @@ class EventWindowsSpec extends SparkSpec {
 
   test("session windows: end = last event + gap; gap splits sessions") {
     import spark.implicits._
-    val out = EventWindows.queries("ev_session")(spark, dir)
+    val out = SparkEntry.queries("ev_session")(spark, dir)
       .orderBy($"user_id", $"s_start")
       .select($"user_id", $"s_start", $"s_end", $"n_events")
       .as[(Long, Timestamp, Timestamp, Long)].collect().toSeq
@@ -42,7 +42,7 @@ class EventWindowsSpec extends SparkSpec {
 
   test("tumbling windows are epoch-aligned hours") {
     import spark.implicits._
-    val out = EventWindows.queries("ev_tumbling")(spark, dir)
+    val out = SparkEntry.queries("ev_tumbling")(spark, dir)
       .orderBy($"w_start", $"event_type")
       .select($"w_start", $"event_type", $"n").as[(Timestamp, String, Long)]
       .collect().toSeq
@@ -55,14 +55,14 @@ class EventWindowsSpec extends SparkSpec {
 
   test("sliding windows put each event in duration/slide = 4 windows") {
     import spark.implicits._
-    val n = EventWindows.queries("ev_sliding")(spark, dir)
+    val n = SparkEntry.queries("ev_sliding")(spark, dir)
       .agg(sum($"n")).head().getLong(0)
     assert(n == 5 * 4)
   }
 
   test("lateness audit: buckets partition the events; in-order bucket has max 0") {
     import spark.implicits._
-    val out = EventWindows.queries("ev_lateness_audit")(spark, dir)
+    val out = SparkEntry.queries("ev_lateness_audit")(spark, dir)
       .select($"bucket", $"n", $"max_late_us")
       .as[(String, Long, Long)].collect()
     val total = graft.Tables.load(spark, dir, "events").count()

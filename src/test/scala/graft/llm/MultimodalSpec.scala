@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** The codec is real: these laws fail if [[Multimodal.encodeKernel]]
   * stops producing genuine PNG streams or [[Multimodal.decodeKernel]]
@@ -69,7 +69,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = java.nio.file.Files.createTempDirectory("phash-spec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = Multimodal.queries("mm_phash_dedup")(spark, d)
+    val out = SparkEntry.queries("mm_phash_dedup")(spark, d)
       .select($"media_id", $"n_same", $"canonical_id")
       .as[(Long, Long, Long)].collect().toSet
     assert(out == Set((5L, 2L, 5L), (773L, 2L, 5L), (9L, 1L, 9L)))
@@ -91,7 +91,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = java.nio.file.Files.createTempDirectory("audio-spec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = Multimodal.queries("mm_audio_energy")(spark, d)
+    val out = SparkEntry.queries("mm_audio_energy")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
       .groupBy(_._1)
     for (id <- Seq(3L, 11L)) {

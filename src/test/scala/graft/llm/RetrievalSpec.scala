@@ -2,7 +2,7 @@ package graft.llm
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Metric-layer law for d_retrieval_eval: the engine's single metric row
   * must equal an independent plain-Scala recomputation over the (already
@@ -43,7 +43,7 @@ class RetrievalSpec extends SparkSpec {
     val nRelRet = ranks.count(grade(_) > 0).toLong
     val firstRel = ranks.indexWhere(grade(_) > 0) + 1
 
-    val out = Retrieval.queries("d_retrieval_eval")(spark, d)
+    val out = SparkEntry.queries("d_retrieval_eval")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]
       .collect().head
     val (nRet, relTot, relRet, dcgM, idcgM, ndcg, mrr, p10, rec) = (

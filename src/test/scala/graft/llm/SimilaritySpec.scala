@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Recall measurement for the ANN tiers against their exact baselines on
   * driver testdata (sf0.01) — the "done" criterion VERDICT r2 set for the
@@ -45,7 +45,7 @@ class SimilaritySpec extends SparkSpec {
         .sortBy(t => (-t._3, t._2)).take(10).zipWithIndex
         .map { case ((lbl, id, d), i) => (lbl, (i + 1).toLong, id, d) }
     }.toSet
-    val got = Similarity.queries("sim_centroid_topk")(spark, small)
+    val got = SparkEntry.queries("sim_centroid_topk")(spark, small)
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(got == want && got.nonEmpty)
   }
@@ -56,7 +56,7 @@ class SimilaritySpec extends SparkSpec {
     // by construction: |x - dequant(quant(x))| ≤ (hi-lo)/255/2 per
     // vector (round to nearest code). The declared query emits the
     // audit scalars; this asserts the bound they're meant to audit.
-    val rows = Similarity.queries("f14_quantize")(spark, dir)
+    val rows = SparkEntry.queries("f14_quantize")(spark, dir)
       .select($"vec_id", $"qlo", $"qhi", $"max_abs_err")
       .as[(Long, Double, Double, Double)].collect()
     assert(rows.length == 500)
@@ -260,7 +260,7 @@ class SimilaritySpec extends SparkSpec {
     Seq((0L, v, 0), (1L, v, 0), (2L, w, 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    val r1 = Similarity.queries("sim_knn_graph")(spark, d)
+    val r1 = SparkEntry.queries("sim_knn_graph")(spark, d)
       .filter($"rank" === 1)
       .select($"vec_id", $"neighbor_id", $"cosine")
       .as[(Long, Long, Double)].collect()
@@ -317,7 +317,7 @@ class SimilaritySpec extends SparkSpec {
   test("MMR equals a driver-side greedy replay; diversification engages") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val out = Similarity.queries("sim_topk_mmr")(spark, dir)
+    val out = SparkEntry.queries("sim_topk_mmr")(spark, dir)
       .as[(Long, Long, Long, Long, Long)].collect()
       .groupBy(_._1).map { case (q, rows) =>
         q -> rows.sortBy(_._5).map(r => (r._2, r._3, r._4)).toSeq
@@ -364,7 +364,7 @@ class SimilaritySpec extends SparkSpec {
   test("served MMR: pool is the IVF tier's candidates; overlap floor vs brute-pool twin") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val served = Similarity.queries("sim_topk_mmr_served")(spark, dir)
+    val served = SparkEntry.queries("sim_topk_mmr_served")(spark, dir)
       .as[(Long, Long, Long, Long, Long)].collect()
     assert(served.nonEmpty)
     // every served pick must come from the served pool (the IVF

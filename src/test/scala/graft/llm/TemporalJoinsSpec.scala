@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** TemporalJoins: planted-scenario semantics + equivalence of the
   * scale-shaped spellings against naive reference spellings on testdata.
@@ -230,7 +230,7 @@ class TemporalJoinsSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = java.nio.file.Files.createTempDirectory("j13-nearest").toString
     rows.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = TemporalJoins.queries("j13_nearest_event")(spark, d)
+    val out = SparkEntry.queries("j13_nearest_event")(spark, d)
       .select($"p_id", $"v_id", $"dt_us")
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(out == Seq(
@@ -241,7 +241,7 @@ class TemporalJoinsSpec extends SparkSpec {
 
   test("j13 nearest equals the naive all-pairs rank on testdata") {
     import spark.implicits._
-    val fast = TemporalJoins.queries("j13_nearest_event")(spark, sf)
+    val fast = SparkEntry.queries("j13_nearest_event")(spark, sf)
       .select($"p_id", $"v_id", $"dt_us")
       .as[(Long, Long, Long)].collect().sorted.toSeq
     val ev = graft.Tables.load(spark, sf, "events")

@@ -2,7 +2,7 @@ package graft.llm
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Planted-truth tests for the round-8 corpus-prep additions:
   * repetition signals, sequence packing, PII-style redaction. The
@@ -27,7 +27,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("repetition: loop doc maxes the signals, distinct doc zeroes them") {
     import spark.implicits._
-    val out = TextOps.queries("d_repetition")(spark, dir)
+    val out = SparkEntry.queries("d_repetition")(spark, dir)
       .select($"doc_id", $"n_trigrams", $"dup_trigram_frac",
         $"top_bigram_share")
       .as[(Long, Long, Double, Double)].collect()
@@ -46,7 +46,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("packing: per-source manifests conserve docs and tokens, ids start at 0") {
     import spark.implicits._
-    val out = TextOps.queries("d_pack_sequences")(spark, dir)
+    val out = SparkEntry.queries("d_pack_sequences")(spark, dir)
       .select($"source", $"seq_id", $"n_docs", $"n_tokens",
         $"first_doc", $"last_doc")
       .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
@@ -71,7 +71,7 @@ class TextOpsSpec extends SparkSpec {
     import spark.implicits._
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_pack_sequences")(spark, d)
+    val out = SparkEntry.queries("d_pack_sequences")(spark, d)
       .select($"seq_id", $"n_docs", $"n_tokens", $"first_doc", $"last_doc")
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(out == Set((0L, 3L, 3000L, 0L, 2L), (1L, 1L, 1000L, 3L, 3L)))
@@ -85,7 +85,7 @@ class TextOpsSpec extends SparkSpec {
     val d = Files.createTempDirectory("capspec").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_source_cap")(spark, d)
+    val out = SparkEntry.queries("d_source_cap")(spark, d)
       .select($"source", $"doc_id", $"rk")
       .as[(String, Long, Long)].collect()
     val bySrc = out.groupBy(_._1)
@@ -116,7 +116,7 @@ class TextOpsSpec extends SparkSpec {
       .withColumn("value", org.apache.spark.sql.functions.lit(0.0))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = graft.queries.Relational.queries("f15_pii_redact")(spark, d)
+    val out = SparkEntry.queries("f15_pii_redact")(spark, d)
       .select($"event_id", $"n_matches", $"first_num", $"props_redacted")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), Option(r.get(2)), r.getString(3))).toMap
@@ -136,7 +136,7 @@ class TextOpsSpec extends SparkSpec {
     val d = Files.createTempDirectory("mixspec").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_mixture_plan")(spark, d)
+    val out = SparkEntry.queries("d_mixture_plan")(spark, d)
       .select($"source", $"src_tokens", $"rate_ppm", $"n_kept", $"kept_tokens")
       .as[(String, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
@@ -167,7 +167,7 @@ class TextOpsSpec extends SparkSpec {
     }.toSeq.toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("hhspec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_heavy_hitters")(spark, d)
+    val out = SparkEntry.queries("d_heavy_hitters")(spark, d)
       .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out == Map("hot" -> (600L, 6000L), "warm" -> (2L, 20L)))
   }
@@ -183,7 +183,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("noveltyspec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_novelty")(spark, d)
+    val out = SparkEntry.queries("d_novelty")(spark, d)
       .select($"doc_id", $"n_shingles", $"novelty")
       .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out(30L) == (6L, 0.0) && out(31L) == (6L, 0.0))
@@ -203,7 +203,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("lmspec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_lm_score")(spark, d)
+    val out = SparkEntry.queries("d_lm_score")(spark, d)
       .select($"doc_id", $"n_tok", $"avg_nll")
       .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out(1L) == ((1L, 0.0)))
@@ -220,7 +220,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("mask-spec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_mask_tokens")(spark, d)
+    val out = SparkEntry.queries("d_mask_tokens")(spark, d)
       .as[(Long, String, String, Long)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
     def expected(id: Long, text: String): (String, String, Long) = {
@@ -251,7 +251,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("bigram-spec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_bigram_lm")(spark, d)
+    val out = SparkEntry.queries("d_bigram_lm")(spark, d)
       .as[(String, String, Long, Long)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
     // p(w2|w1) = (4c-3)/(4*c1) in ppm: c(a,b)=3, c1(a)=3 -> 9/12;
@@ -276,7 +276,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("winnowspec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val fp = TextOps.queries("d_winnow")(spark, d)
+    val fp = SparkEntry.queries("d_winnow")(spark, d)
       .as[(Long, Long)].collect().groupBy(_._1).map { case (k, v) =>
         k -> v.map(_._2).toSet }
     assert((fp(10L) & fp(11L)).nonEmpty, "winnowing guarantee violated")
@@ -288,7 +288,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d2 = Files.createTempDirectory("winnowspec2").toString
     edge.write.mode("overwrite").parquet(s"$d2/documents.parquet")
-    val fp2 = TextOps.queries("d_winnow")(spark, d2)
+    val fp2 = SparkEntry.queries("d_winnow")(spark, d2)
       .as[(Long, Long)].collect().groupBy(_._1)
     assert(!fp2.contains(20L) && fp2(21L).length == 1)
   }
@@ -304,7 +304,7 @@ class TextOpsSpec extends SparkSpec {
     val d = Files.createTempDirectory("driftspec").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_drift")(spark, d)
+    val out = SparkEntry.queries("d_drift")(spark, d)
       .select($"term", $"log_ratio_unat").as[(String, Long)].collect()
     val byTerm = out.toMap
     // the exclusive terms are the two extremes, in opposite directions
@@ -324,7 +324,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("clsspec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_classifier_score")(spark, d)
+    val out = SparkEntry.queries("d_classifier_score")(spark, d)
       .select($"doc_id", $"n_feat", $"score_milli", $"label")
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     def w(feat: String): Long =
@@ -353,7 +353,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("cardspec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_dataset_card")(spark, d).collect().head
+    val out = SparkEntry.queries("d_dataset_card")(spark, d).collect().head
     def g(c: String): Long = out.getAs[Long](c)
     assert(g("n_docs") == 5L && g("n_tokens") == 13L)
     assert(g("n_chars") == Seq("alpha beta gamma", "alpha beta gamma",
@@ -374,7 +374,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val d = Files.createTempDirectory("cms-spec").toString
     docs.write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val out = TextOps.queries("d_cms_eval")(spark, d)
+    val out = SparkEntry.queries("d_cms_eval")(spark, d)
       .as[(String, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
     val exact = Map("aa" -> 5L, "bb" -> 3L, "cc" -> 2L, "dd" -> 1L)
@@ -404,7 +404,7 @@ class TextOpsSpec extends SparkSpec {
     texts.toSeq.map { case (i, t) => (i, t, "en", "s0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$pdir/documents.parquet")
-    val out = TextOps.queries("d_pii_scrub")(spark, pdir)
+    val out = SparkEntry.queries("d_pii_scrub")(spark, pdir)
       .select($"doc_id", $"n_emails", $"n_phones", $"clean_text")
       .as[(Long, Long, Long, String)].collect()
     assert(out.length == 4)

@@ -3,7 +3,7 @@ package graft.queries
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Planted-truth semantics for the analytics layer (the DuckDB oracle
   * proves cross-engine parity; these prove the MATH on hand-checkable
@@ -30,7 +30,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("cohort retention: offsets and rates from first-event weeks") {
     import spark.implicits._
-    val out = Analytics.queries("ev_cohort_retention")(spark, cohortDir)
+    val out = SparkEntry.queries("ev_cohort_retention")(spark, cohortDir)
       .orderBy($"cohort_week", $"week_offset")
       .select($"cohort_week".cast("string"), $"week_offset", $"n_active",
         $"n_cohort", $"retention")
@@ -67,7 +67,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("decile lift: two-phase ranking reproduces global order; lift math exact") {
     import spark.implicits._
-    val out = Analytics.queries("a16_decile_lift")(spark, liftDir)
+    val out = SparkEntry.queries("a16_decile_lift")(spark, liftDir)
       .orderBy($"decile")
       .select($"decile", $"n_users", $"n_pos", $"rate", $"cum_lift")
       .as[(Long, Long, Long, Double, Double)].collect().toSeq
@@ -102,7 +102,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("attribution: last touch in lookback wins; stale or missing → direct") {
     import spark.implicits._
-    val out = Analytics.queries("ev_attribution")(spark, attrDir)
+    val out = SparkEntry.queries("ev_attribution")(spark, attrDir)
       .select($"channel", $"n_conversions", $"sum_value")
       .as[(String, Long, Double)].collect().toMap2
     assert(out("click") == (1L, 10.0)) // purchase 2 ← click 1
@@ -121,7 +121,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = Files.createTempDirectory("an-scd2").toString
     events.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = Analytics.queries("t7_scd2")(spark, d)
+    val out = SparkEntry.queries("t7_scd2")(spark, d)
       .orderBy($"user_id", $"version")
       .select($"user_id", $"version", $"channel", $"valid_from",
         $"valid_to", $"n_events", $"is_current")
@@ -149,7 +149,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val d = Files.createTempDirectory("an-pr").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("g1_pagerank")(spark, d)
+    val out = SparkEntry.queries("g1_pagerank")(spark, d)
       .as[(Long, Long)].collect().toMap
     // n = 5 nodes; uniform init 2e8 ppb. The 2-cycle: deg 1 both sides,
     // each round r = 30e6 + floor(17·2e8/20) = 2e8 — exact fixed point.
@@ -174,7 +174,7 @@ class AnalyticsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
     val d = Files.createTempDirectory("an-merge").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("t8_merge_upsert")(spark, d)
+    val out = SparkEntry.queries("t8_merge_upsert")(spark, d)
       .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
         $"o_totalprice", $"action")
       .as[(Long, Long, String, Double, String)].collect().toSet
@@ -214,7 +214,7 @@ class AnalyticsSpec extends SparkSpec {
     val d = Files.createTempDirectory("an-anomaly").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = Analytics.queries("ev_anomaly")(spark, d)
+    val out = SparkEntry.queries("ev_anomaly")(spark, d)
       .select($"user_id", $"n_ev", $"med2", $"mad4", $"n_out")
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
@@ -233,7 +233,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val d = Files.createTempDirectory("an-tri").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("g2_triangles")(spark, d)
+    val out = SparkEntry.queries("g2_triangles")(spark, d)
       .as[(Long, Long)].collect().toSet
     assert(out == Set((1L, 3L), (2L, 3L), (3L, 3L), (4L, 3L)))
   }
@@ -264,7 +264,7 @@ class AnalyticsSpec extends SparkSpec {
     val d = Files.createTempDirectory("an-hits").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("g6_hits")(spark, d)
+    val out = SparkEntry.queries("g6_hits")(spark, d)
       .as[(Long, Long, Long)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     assert(out == Map(
@@ -282,7 +282,7 @@ class AnalyticsSpec extends SparkSpec {
       .select($"o_totalprice", $"o_orderdate".cast("timestamp").as("o_orderdate"))
     val d = Files.createTempDirectory("an-dow").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("ev_seasonality_dow")(spark, d)
+    val out = SparkEntry.queries("ev_seasonality_dow")(spark, d)
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
     assert(out == Map(
@@ -301,7 +301,7 @@ class AnalyticsSpec extends SparkSpec {
       .select($"o_totalprice", $"o_orderdate".cast("timestamp").as("o_orderdate"))
     val d = Files.createTempDirectory("an-mwu").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("ev_mann_whitney")(spark, d)
+    val out = SparkEntry.queries("ev_mann_whitney")(spark, d)
       .as[(Long, Long, Long, Long)].collect().head
     assert(out == ((3L, 2L, 2L, 24L)))
     // identical distributions on both sides: every cross pair is a tie
@@ -312,7 +312,7 @@ class AnalyticsSpec extends SparkSpec {
       .select($"o_totalprice", $"o_orderdate".cast("timestamp").as("o_orderdate"))
     val d2 = Files.createTempDirectory("an-mwu2").toString
     sym.write.mode("overwrite").parquet(s"$d2/orders.parquet")
-    val out2 = Analytics.queries("ev_mann_whitney")(spark, d2)
+    val out2 = SparkEntry.queries("ev_mann_whitney")(spark, d2)
       .as[(Long, Long, Long, Long)].collect().head
     assert(out2 == ((2L, 2L, 4L, 12L)))
   }
@@ -330,7 +330,7 @@ class AnalyticsSpec extends SparkSpec {
       .select($"o_totalprice", $"o_orderdate".cast("timestamp").as("o_orderdate"))
     val d = Files.createTempDirectory("an-psi").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("m24_psi")(spark, d)
+    val out = SparkEntry.queries("m24_psi")(spark, d)
       .select($"bin", $"n_ref", $"n_cur", $"lr_micro", $"psi_micro")
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
@@ -350,7 +350,7 @@ class AnalyticsSpec extends SparkSpec {
       .select($"o_totalprice", $"o_orderdate".cast("timestamp").as("o_orderdate"))
     val d2 = Files.createTempDirectory("an-psi2").toString
     sym.write.mode("overwrite").parquet(s"$d2/orders.parquet")
-    val zero = Analytics.queries("m24_psi")(spark, d2)
+    val zero = SparkEntry.queries("m24_psi")(spark, d2)
       .select($"psi_micro").as[Long].collect()
     assert(zero.forall(_ == 0L) && zero.length == 2)
   }
@@ -374,7 +374,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("l_suppkey", "l_shipdate", "l_quantity")
     val d = Files.createTempDirectory("an-ivu").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("t12_interval_union")(spark, d)
+    val out = SparkEntry.queries("t12_interval_union")(spark, d)
       .select($"l_suppkey", $"n_intervals", $"covered_days", $"n_items",
         $"longest_days")
       .as[(Long, Long, Long, Long, Long)].collect()
@@ -396,7 +396,7 @@ class AnalyticsSpec extends SparkSpec {
     val d = Files.createTempDirectory("an-trans").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = Analytics.queries("ev_transitions")(spark, d)
+    val out = SparkEntry.queries("ev_transitions")(spark, d)
       .as[(String, String, Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
     assert(out == Map(
@@ -420,7 +420,7 @@ class AnalyticsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
     val d = Files.createTempDirectory("an-incr").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("t9_incremental_agg")(spark, d)
+    val out = SparkEntry.queries("t9_incremental_agg")(spark, d)
       .as[(String, String, Long, Double, Double, Double, Double)]
       .collect().map(r => (r._1, r._2) -> ((r._3, r._4, r._5, r._6, r._7)))
       .toMap
@@ -444,7 +444,7 @@ class AnalyticsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
     val d = Files.createTempDirectory("an-drift").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("a19_drift_bins")(spark, d)
+    val out = SparkEntry.queries("a19_drift_bins")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long, Boolean)].collect()
       .map(r => r._1 -> r).toMap
     assert(out(0L) == ((0L, 2L, 1L, 5000L, 5000L, 0L, false)))
@@ -466,7 +466,7 @@ class AnalyticsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
     val d = Files.createTempDirectory("an-ks").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("a21_ks_drift")(spark, d)
+    val out = SparkEntry.queries("a21_ks_drift")(spark, d)
       .as[(Long, Double, Long, Long)].collect()
     assert(out.toSeq == Seq((5000L, 2.0, 2L, 2L)))
 
@@ -480,7 +480,7 @@ class AnalyticsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
     val d2 = Files.createTempDirectory("an-ks2").toString
     same.write.mode("overwrite").parquet(s"$d2/orders.parquet")
-    val out2 = Analytics.queries("a21_ks_drift")(spark, d2)
+    val out2 = SparkEntry.queries("a21_ks_drift")(spark, d2)
       .as[(Long, Double, Long, Long)].collect()
     assert(out2.head._1 == 0L)
   }
@@ -503,7 +503,7 @@ class AnalyticsSpec extends SparkSpec {
       "o_totalprice", "o_orderdate", "o_orderpriority")
     val d = Files.createTempDirectory("an-fc").toString
     df.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("ev_forecast_naive")(spark, d)
+    val out = SparkEntry.queries("ev_forecast_naive")(spark, d)
       .as[(Long, Double, Long)].collect()
     assert(out.toSeq == Seq((8L, 0.88, 5000L)))
   }
@@ -524,7 +524,7 @@ class AnalyticsSpec extends SparkSpec {
     val d = Files.createTempDirectory("an-surv").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = Analytics.queries("ev_survival_table")(spark, d)
+    val out = SparkEntry.queries("ev_survival_table")(spark, d)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     // durations: 0 → censored u4; 2 → churn u1; 4 → churn u2 + censored
     // u3. n_risk suffix: t=0: 4, t=2: 3, t=4: 2.
@@ -545,7 +545,7 @@ class AnalyticsSpec extends SparkSpec {
     rows.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
       "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("ev_changepoint")(spark, d)
+    val out = SparkEntry.queries("ev_changepoint")(spark, d)
       .select($"cp_day".cast("string"), $"n_days", $"cusum_dollars")
       .as[(String, Long, Double)].collect()
     assert(out.toSeq == Seq(("1997-03-05", 10L, 2.5)))
@@ -561,7 +561,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val d = Files.createTempDirectory("an-lpa").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("g3_communities")(spark, d)
+    val out = SparkEntry.queries("g3_communities")(spark, d)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L))
@@ -585,7 +585,7 @@ class AnalyticsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
     val d = Files.createTempDirectory("an-ewma").toString
     rows.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Analytics.queries("ev_ewma")(spark, d)
+    val out = SparkEntry.queries("ev_ewma")(spark, d)
       .select($"n_terms", $"ema_cents")
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(out == Seq((1L, 100L), (2L, 166L), (3L, 300L),
@@ -603,7 +603,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val d = Files.createTempDirectory("an-kcore").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("g4_kcore")(spark, d)
+    val out = SparkEntry.queries("g4_kcore")(spark, d)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
@@ -627,7 +627,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val d = Files.createTempDirectory("an-bfs").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("g5_bfs")(spark, d)
+    val out = SparkEntry.queries("g5_bfs")(spark, d)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(97L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
   }
@@ -641,7 +641,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val d = Files.createTempDirectory("an-bfs2").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Analytics.queries("g5_bfs")(spark, d)
+    val out = SparkEntry.queries("g5_bfs")(spark, d)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(97L -> 0L, 1L -> 1L, 2L -> 1L))
   }
@@ -666,7 +666,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = Files.createTempDirectory("an-paths").toString
     rows.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = Analytics.queries("ev_paths")(spark, d)
+    val out = SparkEntry.queries("ev_paths")(spark, d)
       .as[(String, String, Long)].collect().toSeq
     assert(out == Seq(("A", "B", 1L), ("M", "N", 1L), ("X", "Y", 1L)))
   }
@@ -684,12 +684,12 @@ class AnalyticsSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$d/orders.parquet")
       d
     }
-    val up = Analytics.queries("ev_trend_ols")(spark, mk(Seq(100L, 200L, 300L)))
+    val up = SparkEntry.queries("ev_trend_ols")(spark, mk(Seq(100L, 200L, 300L)))
       .as[(Long, Long, Long, Long, Long)].head()
     assert(up == ((3L, 3L, 600L, 100000000L, 100L)))
     // declining: y = 300 − 100x — the slope must floor as a NEGATIVE
     // exact value, where a truncate-division would round toward zero
-    val down = Analytics.queries("ev_trend_ols")(spark, mk(Seq(300L, 200L, 100L)))
+    val down = SparkEntry.queries("ev_trend_ols")(spark, mk(Seq(300L, 200L, 100L)))
       .as[(Long, Long, Long, Long, Long)].head()
     assert(down == ((3L, 3L, 600L, -100000000L, 300L)))
   }
@@ -708,7 +708,7 @@ class AnalyticsSpec extends SparkSpec {
       h("del:", k) != 0 && h("mod:", k.toLong) == 0)
     val added = (1 to n).count(k => h("add:", k) == 0)
     val unchanged = n - deleted - modified
-    val out = Analytics.queries("t11_snapshot_diff")(spark, d)
+    val out = SparkEntry.queries("t11_snapshot_diff")(spark, d)
       .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(out.getOrElse("deleted", (0L, 0L))._1 == deleted)
     assert(out.getOrElse("added", (0L, 0L))._1 == added)
@@ -737,7 +737,7 @@ class AnalyticsSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = Files.createTempDirectory("pit-join").toString
     rows.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = Analytics.queries("j14_pit_join")(spark, d)
+    val out = SparkEntry.queries("j14_pit_join")(spark, d)
       .select($"p_id", $"version", $"channel")
       .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
     assert(out == Seq((3L, 1L, "view"), (4L, 2L, "click"), (5L, 2L, "click")))
@@ -751,7 +751,7 @@ class AnalyticsSpec extends SparkSpec {
   test("random walk equals a driver-side hash-argmin replay") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val out = Analytics.queries("g7_random_walk")(spark, sf)
+    val out = SparkEntry.queries("g7_random_walk")(spark, sf)
       .as[(Long, Long, Long)].collect().toSet
     val items = spark.read.parquet(s"$sf/lineitem.parquet")
       .select($"l_orderkey", $"l_partkey").distinct()
@@ -786,7 +786,7 @@ class AnalyticsSpec extends SparkSpec {
   test("node2vec equals a driver-side weighted-argmin replay; all weight classes occur") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
-    val out = Analytics.queries("g8_node2vec")(spark, sf)
+    val out = SparkEntry.queries("g8_node2vec")(spark, sf)
       .as[(Long, Long, Long)].collect().toSet
     val items = spark.read.parquet(s"$sf/lineitem.parquet")
       .select($"l_orderkey", $"l_partkey").distinct()

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Null-handling laws of the join/fill idioms (SURVEY §5: J2/J3 + P9). */
 class RelationalLawsSpec extends SparkSpec {
@@ -11,7 +11,7 @@ class RelationalLawsSpec extends SparkSpec {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
     val orders = graft.Tables.load(spark, dir, "orders")
-    val sampled = Relational.queries("o4_stratified_sample")(spark, dir)
+    val sampled = SparkEntry.queries("o4_stratified_sample")(spark, dir)
 
     // Observed per-stratum rate within a binomial-noise tolerance of the
     // target (50/20/10%); sf0.001 strata hold hundreds of rows each.
@@ -44,7 +44,7 @@ class RelationalLawsSpec extends SparkSpec {
   test("O5 law: grouped split is leakage-free and hits 80/10/10 by group") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val s = Relational.queries("o5_group_hash_split")(spark, dir)
+    val s = SparkEntry.queries("o5_group_hash_split")(spark, dir)
     // leakage-free: every user's events land in exactly ONE split
     val mixed = s.groupBy($"user_id")
       .agg(org.apache.spark.sql.functions.countDistinct($"split").as("k"))
@@ -81,7 +81,7 @@ class RelationalLawsSpec extends SparkSpec {
       }.sortBy { case (_, id, key) => (-key, id) }.take(5)
         .zipWithIndex.map { case ((s, id, _), i) => (s, id, i + 1L) }
     }.toSet
-    val got = Relational.queries("o6_weighted_sample")(spark, dir)
+    val got = SparkEntry.queries("o6_weighted_sample")(spark, dir)
       .select($"source", $"doc_id", $"rk")
       .as[(String, Long, Long)].collect().toSet
     assert(got == expected)
@@ -104,7 +104,7 @@ class RelationalLawsSpec extends SparkSpec {
     // quantiles of the same group.
     val li = graft.Tables.load(spark, dir, "lineitem")
       .select($"l_returnflag", $"l_extendedprice".cast("double").as("x"))
-    val approx = Relational.queries("a8_approx_percentiles")(spark, dir)
+    val approx = SparkEntry.queries("a8_approx_percentiles")(spark, dir)
       .as[(String, Double, Double, Double, Double)].collect()
       .map(r => r._1 -> Seq(r._2, r._3, r._4, r._5)).toMap
     // rank tolerance: the GK guarantee is 1/accuracy = 0.1%, but approx
@@ -168,7 +168,7 @@ class RelationalLawsSpec extends SparkSpec {
   test("A8 law: percentiles are monotone in q and bracketed by min/max") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.01"
-    val ps = Relational.queries("a8_percentiles")(spark, sf)
+    val ps = SparkEntry.queries("a8_percentiles")(spark, sf)
       .as[(String, Double, Double, Double, Double)].collect()
     assert(ps.nonEmpty)
     val bounds = graft.Tables.load(spark, sf, "lineitem")
@@ -212,7 +212,7 @@ class RelationalLawsSpec extends SparkSpec {
       .filter(levenshtein($"a.p_name", $"b.p_name", 2).between(0, 2))
       .select($"a.p_partkey", $"b.p_partkey")
       .as[(Long, Long)].collect().toSet
-    val got = Relational.queries("j7_fuzzy_block")(spark, dir)
+    val got = SparkEntry.queries("j7_fuzzy_block")(spark, dir)
       .select($"key_a", $"key_b").as[(Long, Long)].collect().toSet
     assert(got == truth, s"blocked ${got.size} vs truth ${truth.size}")
   }
@@ -222,7 +222,7 @@ class RelationalLawsSpec extends SparkSpec {
     // condition re-runs it on every raw hash-match — measured 19 s vs
     // 4 s at sf0.1. first()-aggregated names are the barrier; this
     // pins it.
-    val plan = Relational.queries("j7_fuzzy_block")(spark, "/root/testdata/sf0.001")
+    val plan = SparkEntry.queries("j7_fuzzy_block")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     val joinConds = "Join Inner, .*".r.findAllIn(plan).toList ++
       "BroadcastHashJoin.*".r.findAllIn(plan).toList ++
@@ -247,7 +247,7 @@ class RelationalLawsSpec extends SparkSpec {
       .toDF("l_orderkey", "l_partkey")
     val d = java.nio.file.Files.createTempDirectory("j8").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Relational.queries("j8_setsim_join")(spark, d)
+    val out = SparkEntry.queries("j8_setsim_join")(spark, d)
       .as[(Long, Long, Long, Long, Double)].collect().toSet
     assert(out == Set(
       (1L, 2L, 4L, 4L, 1.0),
@@ -258,7 +258,7 @@ class RelationalLawsSpec extends SparkSpec {
 
   test("A20 law: union of partial HLL states estimates exactly as one direct sketch") {
     import spark.implicits._
-    val out = Relational.queries("a20_hll_merge")(spark, "/root/testdata/sf0.001")
+    val out = SparkEntry.queries("a20_hll_merge")(spark, "/root/testdata/sf0.001")
       .as[(String, Long, Long, Long, Long)].collect()
     assert(out.nonEmpty)
     out.foreach { case (st, merged, direct, exact, errBp) =>
@@ -286,7 +286,7 @@ class RelationalLawsSpec extends SparkSpec {
         "l_extendedprice", "l_shipdate")
     val d = java.nio.file.Files.createTempDirectory("j9-spec").toString
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val out = Relational.queries("j9_assoc_rules")(spark, d)
+    val out = SparkEntry.queries("j9_assoc_rules")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long, Long)].collect().toSet
     assert(out == Set(
       (101L, 102L, 2L, 4L, 2L, 500000L, 1000000L),
@@ -305,7 +305,7 @@ class RelationalLawsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
     val d = java.nio.file.Files.createTempDirectory("w18-spec").toString
     rows.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val out = Relational.queries("w18_rank_suite")(spark, d)
+    val out = SparkEntry.queries("w18_rank_suite")(spark, d)
       .select($"o_orderkey", $"pct_rank", $"quartile")
       .as[(Long, Double, Long)].collect().sortBy(_._1).toSeq
     assert(out.map(_._2) == (0 to 7).map(_ / 7.0))
@@ -329,7 +329,7 @@ class RelationalLawsSpec extends SparkSpec {
       val ws = orders.map { case (k, c) => (weight(r, k), c) }
       r.toLong -> (ws.map(_._1).sum, ws.map { case (w, c) => w * c }.sum)
     }.toMap
-    val got = Relational.queries("o8_poisson_bootstrap")(spark, dir)
+    val got = SparkEntry.queries("o8_poisson_bootstrap")(spark, dir)
       .select($"replicate", $"n_eff", $"sum_cents")
       .as[(Long, Long, Long)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
@@ -343,7 +343,7 @@ class RelationalLawsSpec extends SparkSpec {
   test("A22 law: unpivot is the exact inverse of pivot; 3 rows per group") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val long = Relational.queries("a22_unpivot")(spark, dir)
+    val long = SparkEntry.queries("a22_unpivot")(spark, dir)
     val wide = graft.Tables.load(spark, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n_rows"),
@@ -404,7 +404,7 @@ class RelationalLawsSpec extends SparkSpec {
     // filter is redundant with the join — that's the contract).
     for (nKeys <- Seq(4, 1200)) {
       val d = j12Dir(nKeys)
-      val out = Relational.queries("j12_minmax_prune")(spark, d)
+      val out = SparkEntry.queries("j12_minmax_prune")(spark, d)
         .as[(String, Long, Long, Double)].collect().sortBy(_._1).toSeq
       val half = (nKeys / 2).toLong
       val expect = Seq(
@@ -426,7 +426,7 @@ class RelationalLawsSpec extends SparkSpec {
       .toDF("o_orderkey", "o_orderpriority")
     val d = java.nio.file.Files.createTempDirectory("o7-law").toString
     orders.write.mode("overwrite").parquet(s"$d/orders.parquet")
-    val run1 = Relational.queries("o7_reservoir_sample")(spark, d)
+    val run1 = SparkEntry.queries("o7_reservoir_sample")(spark, d)
       .as[(String, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
     val byGroup = run1.groupBy(_._1)
     assert(byGroup("A").size == 20 && byGroup("B").size == 7)
@@ -437,7 +437,7 @@ class RelationalLawsSpec extends SparkSpec {
     // sample — repartitioning the query output would test nothing
     val d2 = java.nio.file.Files.createTempDirectory("o7-law2").toString
     orders.repartition(7).write.mode("overwrite").parquet(s"$d2/orders.parquet")
-    val run2 = Relational.queries("o7_reservoir_sample")(spark, d2)
+    val run2 = SparkEntry.queries("o7_reservoir_sample")(spark, d2)
       .as[(String, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
     assert(run1 == run2)
   }
@@ -459,7 +459,7 @@ class RelationalLawsSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = java.nio.file.Files.createTempDirectory("w19-law").toString
     rows.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = Relational.queries("w19_running_distinct")(spark, d)
+    val out = SparkEntry.queries("w19_running_distinct")(spark, d)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(out == Seq((1L, 1L, 1L), (2L, 1L, 1L), (3L, 1L, 2L),
       (4L, 1L, 2L), (5L, 1L, 3L), (6L, 2L, 1L)))
@@ -473,6 +473,6 @@ class RelationalLawsSpec extends SparkSpec {
     val d = java.nio.file.Files.createTempDirectory("j12-empty").toString
     parts.write.mode("overwrite").parquet(s"$d/part.parquet")
     li.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    assert(Relational.queries("j12_minmax_prune")(spark, d).isEmpty)
+    assert(SparkEntry.queries("j12_minmax_prune")(spark, d).isEmpty)
   }
 }

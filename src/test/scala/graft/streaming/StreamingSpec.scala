@@ -6,8 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSpec
-import graft.llm.EventWindows
+import graft.{SparkEntry, SparkSpec}
 
 /** Batch ≡ stream parity on a finite events directory. */
 class StreamingSpec extends SparkSpec {
@@ -36,7 +35,7 @@ class StreamingSpec extends SparkSpec {
         StreamingWindows.tumbling(stream), "t_tumbling", OutputMode.Complete())
       .orderBy($"w_start", $"event_type")
       .as[(Timestamp, Timestamp, String, Long, Double)].collect().toSeq
-    val want = EventWindows.queries("ev_tumbling")(spark, dir)
+    val want = SparkEntry.queries("ev_tumbling")(spark, dir)
       .orderBy($"w_start", $"event_type")
       .as[(Timestamp, Timestamp, String, Long, Double)].collect().toSeq
     assert(got == want && got.nonEmpty)
@@ -71,7 +70,7 @@ class StreamingSpec extends SparkSpec {
         StreamingWindows.session(stream, delay = "1 day"), "t_session", OutputMode.Complete())
       .orderBy($"user_id", $"s_start")
       .as[(Long, Timestamp, Timestamp, Long, Double)].collect().toSeq
-    val want = EventWindows.queries("ev_session")(spark, dir)
+    val want = SparkEntry.queries("ev_session")(spark, dir)
       .orderBy($"user_id", $"s_start")
       .as[(Long, Timestamp, Timestamp, Long, Double)].collect().toSeq
     assert(got == want && got.nonEmpty)
@@ -267,7 +266,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy($"user_id", $"s_start")
       .as[(Long, Timestamp, Timestamp, Long, Double)].collect().toSeq
     // batch twin, minus the sentinel's still-open session
-    val want = EventWindows.queries("ev_session")(spark, d)
+    val want = SparkEntry.queries("ev_session")(spark, d)
       .filter($"s_start" < lit(ts("2024-01-02 00:00:00")))
       .orderBy($"user_id", $"s_start")
       .as[(Long, Timestamp, Timestamp, Long, Double)].collect().toSeq
@@ -314,7 +313,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy($"user_id", $"s_start")
       .as[(Long, Timestamp, Timestamp, Long, Double)].collect().toSeq
     // batch twin on the merged data, minus the sentinel's open session
-    val want = EventWindows.queries("ev_session")(spark, d)
+    val want = SparkEntry.queries("ev_session")(spark, d)
       .filter($"user_id" === 1L)
       .orderBy($"user_id", $"s_start")
       .as[(Long, Timestamp, Timestamp, Long, Double)].collect().toSeq
@@ -555,7 +554,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = java.nio.file.Files.createTempDirectory("struncnt-spec").toString
     events.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = StreamingWindows.queries("st_running_counts")(spark, d)
+    val out = SparkEntry.queries("st_running_counts")(spark, d)
       .select($"user_id", $"n", $"last_ts")
       .as[(Long, Long, java.sql.Timestamp)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
@@ -574,7 +573,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val d = java.nio.file.Files.createTempDirectory("stdedup-spec").toString
     events.write.mode("overwrite").parquet(s"$d/events.parquet")
-    val out = StreamingWindows.queries("st_dedup")(spark, d)
+    val out = SparkEntry.queries("st_dedup")(spark, d)
       .select($"event_id", $"user_id", $"event_type", $"value")
       .as[(Long, Long, String, Double)].collect().toSeq.sortBy(_._1)
     // the query delivers every event twice; each must survive exactly once
